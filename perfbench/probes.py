@@ -56,6 +56,23 @@ def tree_rss_mb(root: int) -> float:
     return total_kb / 1024.0
 
 
+def tree_cpu_s(root: int, skip: int | None = None) -> float:
+    """CPU seconds (user + system, with reaped children's) used so far
+    by `root` and its descendants, leaving out the process `skip`."""
+    ticks = 0
+    for pid in process_tree(root):
+        if pid == skip:
+            continue
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        # utime, stime, cutime, cstime: fields 14-17 of proc(5)
+        ticks += sum(int(x) for x in fields[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 class RssSampler:
     """Samples the memory of this process tree (driver, JVM, Python
     workers) on a thread; `peak_mb` is the largest sum seen."""
@@ -233,6 +250,7 @@ class SpeedSampler:
     def __enter__(self) -> "SpeedSampler":
         self._p = subprocess.Popen([sys.executable, "-c", _KERNEL],
                                    stdout=subprocess.PIPE, text=True)
+        self.pid = self._p.pid
         return self
 
     def __exit__(self, *exc) -> None:
