@@ -345,3 +345,47 @@ def test_prefetcher_failure_logged_and_resurfaces(spark, caplog):
     assert any("failing_stage" in r.getMessage() for r in caplog.records)
     with pytest.raises(Exception, match="boom"):
         df.count()
+
+
+def _plan_nodes(node, out, in_cache=False):
+    """Walk an executed physical plan through AQE wrappers and query
+    stages; collect (class name, inside-a-cached-relation, node). An
+    InMemoryTableScan is a leaf of the plan; its cached plan is walked
+    with in_cache=True."""
+    name = node.getClass().getSimpleName()
+    out.append((name, in_cache, node))
+    if name == "AdaptiveSparkPlanExec":
+        _plan_nodes(node.executedPlan(), out, in_cache)
+        return
+    if name.endswith("QueryStageExec"):
+        _plan_nodes(node.plan(), out, in_cache)
+        return
+    if name == "InMemoryTableScanExec":
+        _plan_nodes(node.relation().cacheBuilder().cachedPlan(), out, True)
+        return
+    children = node.children()
+    for i in range(children.size()):
+        _plan_nodes(children.apply(i), out, in_cache)
+
+
+def test_pip_runs_once(pipeline_out):
+    """membership and islands read ONE cached PIP hit set: both
+    executed plans scan the same cached relation, the PIP refine
+    (mapInPandas) lives inside it, and neither plan runs a Python map
+    of its own outside it."""
+    builders = []
+    for name in ("membership", "islands"):
+        nodes = []
+        _plan_nodes(pipeline_out[name]._jdf.queryExecution().executedPlan(),
+                    nodes)
+        scans = [n for cls, inside, n in nodes
+                 if cls == "InMemoryTableScanExec" and not inside]
+        assert scans, f"{name} does not read the cached hit set"
+        py_maps = [inside for cls, inside, _ in nodes if "MapIn" in cls]
+        assert any(py_maps), \
+            f"{name}: PIP refine not inside the cached relation"
+        assert all(py_maps), \
+            f"{name} re-runs a Python map outside the cached hit set"
+        builders.append({s.relation().cacheBuilder() for s in scans})
+    assert builders[0] & builders[1], \
+        "membership and islands read different cached relations"

@@ -133,6 +133,35 @@ def test_pipeline_resume_skips_recompute(spark, tmp_path):
     assert lineage_rows_2 == lineage_rows_1  # nothing re-materialized
 
 
+def test_pipeline_resume_with_pip(spark, tmp_path):
+    """Resume with PIP on: the shared PIP hit set is a warehouse stage,
+    so a second run loads it (no lineage rows appended) and rebuilds
+    the same membership rows from it."""
+    from topo2osm_spark.plans.pipeline import run_pipeline
+    from topo2osm_spark.schema import DOCUMENTS
+    from topo2osm_spark.sources import fixtures
+
+    tbl = fixtures.generate_documents(6, n_municipalities=3, seed=11)
+    docs = spark.createDataFrame(tbl.to_pylist(), DOCUMENTS)
+    wh = Warehouse(spark, str(tmp_path / "whpip"))
+
+    def membership(out):
+        return sorted(tuple(r) for r in out["membership"].collect())
+
+    out1 = run_pipeline(spark, docs, warehouse=wh, run_pip=True,
+                        run_tiles=False)
+    members1 = membership(out1)
+    lineage_rows_1 = wh.lineage().count()
+    assert wh.manifest("pip_hits")["rows"] > 0
+
+    out2 = run_pipeline(spark, docs, warehouse=wh, run_pip=True,
+                        run_tiles=False)
+    members2 = membership(out2)
+
+    assert members1 and members2 == members1
+    assert wh.lineage().count() == lineage_rows_1  # PIP not recomputed
+
+
 def test_warehouse_file_uri_roundtrip(spark, tmp_path):
     """Filesystem-agnostic metadata I/O (r2 verdict task 7): the
     warehouse works against a `file://` URI root — listing, manifest

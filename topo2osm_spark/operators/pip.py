@@ -6,9 +6,11 @@ partition-based spatial join: both sides encode to quadtree cells,
 equi-join on the cell id (stock SMJ/SHJ — Catalyst handles it), then
 a numpy ray-cast refines candidates per ring group.
 
-Used twice by the pipeline: FLATE interior-point -> assembled-ring
-membership (attribute assignment) and island-in-water containment
-hierarchy (multipolygon roles).
+One hit set, two consumers: the pipeline runs pip_join once per
+conversion and materializes its hole-aware hit set (hits joined with
+ring metadata); both FLATE interior-point -> assembled-ring membership
+(attribute assignment) and the island-in-water containment hierarchy
+(multipolygon roles) read that one set.
 
 Scale notes: ring cover cells are generated at an adaptive per-ring
 resolution (bounded cell count per ring, so a fjord-length coastline

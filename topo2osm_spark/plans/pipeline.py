@@ -14,7 +14,8 @@ DataFrame DAG:
      propagation over the edge set)           — shuffle
   S7 way re-collect (sorted by pos)           — shuffle
   S8 broadcast tag join                       — no shuffle
-  S9 PIP membership + raster<->vector tile join — cell equi-joins
+  S9 PIP hit set (computed once, read by membership
+     AND islands) + raster<->vector tile join — cell equi-joins
   S10 outputs: nodes/ways/relations/tile_assignments/echo/metrics
 
 Every output id is content-addressed (63-bit xxhash64 of stable
@@ -60,6 +61,10 @@ class _Prefetcher:
     consumed sequentially; concurrent downstream actions on a stage
     being materialized just block on the BlockManager's per-partition
     locks rather than recomputing.
+
+    Persisted DataFrames are submitted the same way (the PIP hit set;
+    ck() in run_pipeline says why it is not checkpointed): count()
+    fills their cache just as it fills a checkpoint's blocks.
     """
 
     def __init__(self) -> None:
@@ -158,9 +163,9 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
     in-memory corpus).
 
     persist=True keeps the multiply-consumed intermediates (parsed
-    geometry, rings, way nodes, snap map) — they feed 2-4 downstream
-    branches each; without a warehouse checkpoint they would otherwise
-    recompute per action.
+    geometry, rings, way nodes, snap map, PIP hit set) — they feed 2-4
+    downstream branches each; without a warehouse checkpoint they would
+    otherwise recompute per action.
 
     persist_level: DISK_ONLY by default. Measured on local[32]:
     deserialized MemoryStore caching of the wide nested coord arrays
@@ -168,6 +173,12 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
     2-3x slowdown), while DISK_ONLY stays flat — the local shuffle
     disk is fast and columnar blocks compress. On a real cluster with
     per-executor memory pools, pass "MEMORY_AND_DISK" (serialized).
+
+    cache_docs: None (auto) caches the input documents on the in-memory
+    checkpoint path; False never caches them (file-backed callers keep
+    their pruned media scan). The input is cached only when there is no
+    warehouse and persist=True, so an explicit cache_docs=True is
+    ignored with a warehouse or with persist=False.
     """
     from pyspark import StorageLevel
     level = getattr(StorageLevel, persist_level)
@@ -233,6 +244,16 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
             # above gets the same truncation from its parquet
             # write+re-read). Storage level as configured (DISK_ONLY
             # locally — see persist_level note).
+            # "Lazy" is only partly lazy: localCheckpoint(eager=False)
+            # still blocks the CALLING thread until every broadcast side
+            # of its plan is computed (measured in isolation, local
+            # mode, AQE off, 4 vCPUs: a broadcast join of a 3-s
+            # mapInPandas side blocked 6.3 s, the same join without a
+            # broadcast 0.17 s). Stages with an
+            # expensive broadcast side therefore persist instead (the
+            # PIP hit set below: its trim_ladder broadcast costs ~2.4 s
+            # on the main thread, and a ck() prototype gained about half
+            # what persist + prefetch did).
             df = df.localCheckpoint(eager=False, storageLevel=level)
             if pf is not None:
                 pf.submit(df, name)
@@ -547,7 +568,21 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
             "ring_uid", F.col("doc_id").alias("ring_doc_id"), "span_idx",
             F.col("flate_id").alias("ring_flate_id"),
             F.col("objtype").alias("ring_objtype"), "is_hole", "area")
+        # ONE hit set, two consumers: membership and islands both read
+        # this materialized (hit ⋈ ring_meta) set, so the ring cover
+        # (join + trim_ladder broadcast), point ladder, candidate join
+        # and refine run once per conversion instead of once per write.
+        # In memory it is persisted, not ck()'d (lazy localCheckpoint
+        # blocks on the trim_ladder broadcast, see ck()): the prefetch
+        # thread runs the whole PIP plan on idle executors while the
+        # caller writes the earlier outputs.
         hitm = hits.join(ring_meta, "ring_uid")
+        if warehouse is not None:
+            hitm = ck(hitm, "pip_hits")
+        elif persist:
+            hitm = hitm.persist(level)
+            if pf is not None:
+                pf.submit(hitm, "pip_hits")
         pt_meta = pts.select("pt_uid", "pt_doc", "pt_flate").join(
             flates.select(F.col("doc_id").alias("pt_doc"),
                           F.col("obj_id").alias("pt_flate"),

@@ -103,7 +103,7 @@ def _emit_curve(buf: list[str], cid: int, objtype: str, n: np.ndarray,
     # vectorized row formatting: np.rint is round-half-even exactly like
     # round() on a float, so the emitted integers match the former
     # per-point f"{_fmt_int(..)}" loop byte-for-byte (pinned by
-    # test_fixture_bytes_identical); the generator spends ~20% of its
+    # test_generator_bytes_pinned); the generator spends ~20% of its
     # time here at 50k docs.
     ni = np.rint(np.asarray(n, dtype=np.float64) / ENHET).astype(np.int64).tolist()
     ei = np.rint(np.asarray(e, dtype=np.float64) / ENHET).astype(np.int64).tolist()
