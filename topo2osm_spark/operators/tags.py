@@ -14,6 +14,8 @@ polygons during assembly, matching the reference's behavior.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (BooleanType, MapType, StringType,
+                               StructField, StructType)
 
 # (objtype, geometry kind 'KURVE'|'FLATE', {tags}); None tags = drop.
 TAG_TABLE: list[tuple[str, str, dict | None]] = [
@@ -47,6 +49,16 @@ TAG_TABLE: list[tuple[str, str, dict | None]] = [
 ]
 
 
+# A StructType, not a DDL string: a DDL schema goes through the JVM's
+# SQL parser (ddlToJson) on every call, on the planning path.
+TAG_SCHEMA = StructType([
+    StructField("objtype", StringType()),
+    StructField("geom_kind", StringType()),
+    StructField("tags", MapType(StringType(), StringType())),
+    StructField("emit", BooleanType()),
+])
+
+
 def tag_df(spark: SparkSession) -> DataFrame:
     """The tag table as a (objtype, geom_kind, tags map, emit bool)
     DataFrame — broadcast side of the tag join."""
@@ -56,8 +68,7 @@ def tag_df(spark: SparkSession) -> DataFrame:
          t is not None)
         for ot, gk, t in TAG_TABLE
     ]
-    return spark.createDataFrame(
-        rows, "objtype string, geom_kind string, tags map<string,string>, emit boolean")
+    return spark.createDataFrame(rows, TAG_SCHEMA)
 
 
 def join_tags(df: DataFrame, spark: SparkSession, objtype_col: str = "objtype",
@@ -70,8 +81,9 @@ def join_tags(df: DataFrame, spark: SparkSession, objtype_col: str = "objtype",
         (df[objtype_col] == t["objtype"]) & (df[kind_col] == t["geom_kind"]),
         "left",
     ).drop(t["objtype"]).drop(t["geom_kind"])
+    no_tags = F.create_map().cast(TAG_SCHEMA["tags"].dataType)
     return joined.withColumn(
-        "tags", F.coalesce(F.col("tags"), F.create_map().cast("map<string,string>"))
+        "tags", F.coalesce(F.col("tags"), no_tags)
     ).withColumn("emit", F.coalesce(F.col("emit"), F.lit(False)))
 
 

@@ -19,6 +19,8 @@ the join keeps the fan-in bounded.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from topo2osm_spark.functions import cells
@@ -28,12 +30,24 @@ VECTOR_RES = 14  # finest tile zoom in the corpus; vector cells at this res
 # ------------------------------------------------------------------
 # JVM (codegen) mirrors of functions/cells.py — the raster<->vector
 # join touches every way node times every zoom present, so its cell
-# math must stay inside whole-stage codegen, not a Python worker. The
-# Morton magic-number spreads use only LITERAL shift counts, so they
-# compile to plain Spark SQL; variable shifts (parent's 2*(res-z))
-# become exact integer division by pow(2, k) (powers of two are exact
-# in double far beyond 2^58). numpy kernels remain the mapInArrow-side
-# implementation; test_tiles_jvm_cells pins both to the same values.
+# math must stay inside whole-stage codegen, not a Python worker.
+# The codec is built as Column-API expression trees, never as SQL
+# text: each magic-mask spread step references its input twice, so a
+# SQL string of the spread holds 32 copies of its argument, and for
+# cell_at_res_expr (whose argument is the whole floor(asinh(tan(...)))
+# index) that made one ~11.8k-character nested string. Parsing it in
+# a fresh JVM blocked the driver: the first parse_media_refs and
+# cell_at_vector_res withColumn took 0.9 s each on a 1-row frame, 0.4
+# and 0.2 s as Column trees (4-vCPU host); inside a whole conversion's
+# plan the SQL text also left the driver JVM with 1.6 GB of G1 heap
+# committed after one convert_coastal conversion vs 0.9-1.1 GB with
+# the Column API (2 GB max heap). A Column tree shares the argument by
+# reference instead of copying its text.
+# Variable shifts (parent's 2*(res-z)) are exact integer division
+# (`div`) by pow(2, k) cast to long — powers of two are exact in
+# double far beyond 2^58, and `div` never rounds through a double.
+# numpy kernels remain the mapInArrow-side implementation;
+# test_tiles_jvm_cells pins both to the same values.
 
 _RES_SHIFT_MUL = 1 << 58
 _MORTON_MASK = (1 << 58) - 1
@@ -42,58 +56,77 @@ _SPREAD_STEPS = ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
                  (1, 0x5555555555555555))
 
 
-def _spread_sql(col: str) -> str:
-    """SQL expr: spread the low 29 bits of `col` to even bit positions
+def _c(v: str | Column) -> Column:
+    """A Column as is; a str is a SQL fragment (column name or expr)."""
+    return v if isinstance(v, Column) else F.expr(v)
+
+
+def _spread(v: Column) -> Column:
+    """Spread the low 29 bits of long `v` to even bit positions
     (part1by1, same magic numbers as cells._spread_bits)."""
-    v = f"(({col}) & 536870911)"
+    v = v.bitwiseAND(F.lit(536870911))
     for sh, mask in _SPREAD_STEPS:
-        v = f"((({v}) | shiftleft(({v}), {sh})) & {mask})"
+        v = v.bitwiseOR(F.shiftleft(v, sh)).bitwiseAND(F.lit(mask))
     return v
 
 
-def tile_cell_expr(z: str, x: str, y: str) -> Column:
+def _cell(res: Column, ix: Column, iy: Column) -> Column:
+    """res << 58 | morton(ix, iy), for long ix/iy."""
+    return (res.cast("long") * F.lit(_RES_SHIFT_MUL)
+            + (_spread(ix) + F.lit(2) * _spread(iy)))
+
+
+def tile_cell_expr(z: str | Column, x: str | Column,
+                   y: str | Column) -> Column:
     """(z, x, y) tile -> cell id, JVM-side (cells.cell_from_tile)."""
-    morton = f"({_spread_sql(x)} + 2 * {_spread_sql(y)})"
-    return F.expr(f"CAST({z} AS BIGINT) * {_RES_SHIFT_MUL} + {morton}")
+    return _cell(_c(z), _c(x).cast("long"), _c(y).cast("long"))
 
 
-def cell_at_res_expr(lat: str, lon: str, res: int) -> Column:
+def cell_at_res_expr(lat: str | Column, lon: str | Column,
+                     res: int) -> Column:
     """(lat, lon) -> cell id at LITERAL resolution res (cells.encode)."""
     n = 1 << res
-    lat_c = f"greatest(least({lat}, {cells.MAX_LAT}), {-cells.MAX_LAT})"
-    xn = f"((({lon}) + 180.0) / 360.0)"
-    yn = f"((1.0 - asinh(tan(radians({lat_c}))) / pi()) / 2.0)"
-    ix = f"least(greatest(CAST(floor({xn} * {n}.0) AS BIGINT), 0), {n - 1})"
-    iy = f"least(greatest(CAST(floor({yn} * {n}.0) AS BIGINT), 0), {n - 1})"
-    return F.expr(f"{res}L * {_RES_SHIFT_MUL} + "
-                  f"({_spread_sql(ix)} + 2 * {_spread_sql(iy)})")
+    lat_c = F.greatest(F.least(_c(lat), F.lit(cells.MAX_LAT)),
+                       F.lit(-cells.MAX_LAT))
+    xn = (_c(lon) + F.lit(180.0)) / F.lit(360.0)
+    yn = (F.lit(1.0) - F.asinh(F.tan(F.radians(lat_c))) / F.lit(math.pi)) \
+        / F.lit(2.0)
+
+    def index(v: Column) -> Column:
+        return F.least(F.greatest(F.floor(v * F.lit(float(n))), F.lit(0)),
+                       F.lit(n - 1))
+    return _cell(F.lit(res), index(xn), index(yn))
 
 
-def parent_cell_expr(cell: str, z: str) -> Column:
+def parent_cell_expr(cell: str | Column, z: str | Column) -> Column:
     """Ancestor of `cell` at coarser resolution column `z`
     (cells.parent). Variable shift via exact pow-of-two division."""
-    res = f"shiftrightunsigned({cell}, 58)"
-    morton = f"(({cell}) & {_MORTON_MASK})"
-    return F.expr(
-        f"CAST({z} AS BIGINT) * {_RES_SHIFT_MUL} + "
-        f"({morton} DIV CAST(pow(2.0, 2 * ({res} - {z})) AS BIGINT))")
+    cell_c, z_c = _c(cell), _c(z)
+    res = F.shiftrightunsigned(cell_c, 58)
+    morton = cell_c.bitwiseAND(F.lit(_MORTON_MASK))
+    step = F.pow(F.lit(2.0), F.lit(2) * (res - z_c)).cast("long")
+    return (z_c.cast("long") * F.lit(_RES_SHIFT_MUL)
+            + F.call_function("div", morton, step))
 
 
-def cell_at_vector_res(lat: str, lon: str) -> Column:
+def cell_at_vector_res(lat: str | Column, lon: str | Column) -> Column:
     return cell_at_res_expr(lat, lon, VECTOR_RES)
 
 
 def parse_media_refs(media_spans: DataFrame) -> DataFrame:
     """(doc_id, media_ref) -> adds z/x/y ints and tile_cell. Malformed
-    refs are dropped (filter on regexp match) — scan-level predicate."""
+    refs are dropped, never raised on: the captured digits are
+    try_cast (an out-of-range number becomes null), and only tiles
+    with z <= VECTOR_RES and x, y < 2^z are kept."""
     pat = r"^tile/(\d+)/(\d+)/(\d+)$"
-    m = (media_spans
-         .where(F.col("media_ref").rlike(pat))
-         .withColumn("z", F.regexp_extract("media_ref", pat, 1).cast("int"))
-         .withColumn("x", F.regexp_extract("media_ref", pat, 2).cast("int"))
-         .withColumn("y", F.regexp_extract("media_ref", pat, 3).cast("int"))
-         .where((F.col("z") <= VECTOR_RES) & (F.col("z") >= 0)))
-    return m.withColumn("tile_cell", tile_cell_expr("z", "x", "y"))
+    m = media_spans.where(F.col("media_ref").rlike(pat))
+    for i, name in enumerate(("z", "x", "y"), 1):
+        m = m.withColumn(
+            name, F.regexp_extract("media_ref", pat, i).try_cast("int"))
+    z, x, y = F.col("z"), F.col("x"), F.col("y")
+    side = F.pow(F.lit(2), z)  # exact in double; digits are never < 0
+    m = m.where((z <= VECTOR_RES) & (x < side) & (y < side))
+    return m.withColumn("tile_cell", tile_cell_expr(z, x, y))
 
 
 def tile_vector_join(media: DataFrame, vector_cells: DataFrame,

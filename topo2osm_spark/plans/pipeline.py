@@ -288,6 +288,11 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
     # limits here (static guard), so that stamp is how the plan learns
     # the input width without touching the RDD layer. Absent stamp (e.g.
     # createDataFrame inputs) -> conservative rebalance as before.
+    # Keeping the generator's layout assumes parse COST per partition
+    # is balanced, not just doc count: a partition holding several
+    # Zipf-head (large) documents runs as one straggling task with no
+    # 2x-parallelism headroom to absorb it. A cached input with skewed
+    # per-partition parse cost should pass an explicit parse_partitions.
     n_parse = parse_partitions
     if n_parse is None:
         try:
