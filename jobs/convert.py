@@ -43,9 +43,6 @@ def main() -> int:
                     help="enable AQE (recommended on real clusters; its "
                          "per-stage re-optimization costs 1.5-2x at sandbox "
                          "scale, so local benches leave it off)")
-    ap.add_argument("--no-prefetch", action="store_true",
-                    help="disable background stage materialization "
-                         "(A/B probe for the plan/execute overlap)")
     ap.add_argument("--persist-level", default="DISK_ONLY",
                     help="StorageLevel name for stage persists "
                          "(DISK_ONLY | MEMORY_AND_DISK | ...)")
@@ -94,7 +91,7 @@ def main() -> int:
         input_fp = fingerprint("synth", args.n_docs, 42, args.max_sosi)
     wh = None if args.no_checkpoint else Warehouse(spark, args.out)
     out = run_pipeline(spark, docs, warehouse=wh, resume=args.resume,
-                       input_fp=input_fp, prefetch=not args.no_prefetch,
+                       input_fp=input_fp,
                        persist_level=args.persist_level,
                        parse_partitions=args.parse_partitions,
                        # file-backed input: keep the pruned parquet

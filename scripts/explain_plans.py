@@ -66,7 +66,7 @@ def main() -> int:
     simple_q1 = buf.getvalue()
 
     docs = documents_df(spark, 6, n_municipalities=3, seed=42)
-    out = run_pipeline(spark, docs, persist=False)
+    out = run_pipeline(spark, docs)
     sections.append(("pipeline:points", grab(out["points"])))
     sections.append(("pipeline:ways", grab(out["ways"])))
     # capture the tile plan's AT-SCALE shape: the audit corpus is tiny,

@@ -1,5 +1,6 @@
 """Diagnostic: parse-chain decomposition with/without the pre-parse
-rebalance. Times geo materialization and node dedup separately.
+rebalance. Times the fused parse pass (ring assembly included), node
+dedup and the snap map separately.
 
 Usage: spark-submit --py-files engine.zip scripts/probe_parse.py \
            --input _data/scale_128000.parquet --master local[8] \
@@ -54,8 +55,12 @@ def main() -> int:
                       "parse_partitions": np_}))
     clock("span_scan_only", lambda: ss.count())
     from pyspark import StorageLevel
-    geo = sosi.tokenize_project_spans(ss).persist(StorageLevel.DISK_ONLY)
-    clock("tokenize_project", lambda: geo.count())
+    # the pipeline's one parse operator: tokenize + reproject + span-local
+    # ring assembly in a single Arrow pass
+    geo_all = sosi.tokenize_project_assemble_spans(ss).persist(
+        StorageLevel.DISK_ONLY)
+    clock("tokenize_project_assemble", lambda: geo_all.count())
+    geo = geo_all.where(F.col("row_kind") == "obj")
     # node dedup on top of persisted geo (mirrors pipeline S5)
     way_nodes = nodeops.quantize(
         geo.select("doc_id",
@@ -66,12 +71,6 @@ def main() -> int:
         way_nodes.select("lat", "lon")).persist(StorageLevel.DISK_ONLY)
     clock("dedup_nodes", lambda: nodes_raw.count())
     clock("snap_map", lambda: nodeops.snap_mapping(nodes_raw).count())
-    from topo2osm_spark.operators import assembly
-    curves = geo.where(F.col("obj_kind") == "KURVE")
-    flates = geo.where(F.col("obj_kind") == "FLATE")
-    rings = assembly.assemble_rings(flates, curves).persist(
-        StorageLevel.DISK_ONLY)
-    clock("assemble_rings", lambda: rings.count())
     print(json.dumps({"master": spark.sparkContext.master, "stages": t}))
     spark.stop()
     return 0

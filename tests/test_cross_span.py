@@ -41,8 +41,7 @@ def _doc(spark, span_texts, doc_id="xdoc"):
 
 def _run(spark, docs):
     from topo2osm_spark.plans.pipeline import run_pipeline
-    return run_pipeline(spark, docs, run_pip=False, run_tiles=False,
-                        persist=False, prefetch=False)
+    return run_pipeline(spark, docs, run_pip=False, run_tiles=False)
 
 
 def test_cross_span_flate_assembles_closed_ring(spark):

@@ -49,8 +49,7 @@ def mega_out(spark):
         [{"doc_id": "mega", "spans": [
             {"kind": "sosi", "text": FRAG, "media_ref": None, "offset": 0}]}],
         DOCUMENTS)
-    out = run_pipeline(spark, docs, run_tiles=False, persist=False,
-                       prefetch=False)
+    out = run_pipeline(spark, docs, run_tiles=False)
     return {k: out[k].collect()
             for k in ("rings", "ways", "relations", "membership",
                       "islands", "integrity", "nodes")}

@@ -347,6 +347,39 @@ def test_prefetcher_failure_logged_and_resurfaces(spark, caplog):
         df.count()
 
 
+def test_failed_planning_stops_prefetcher(spark):
+    """A run_pipeline call that raises while planning (here: no `spans`
+    column) still closes its prefetch thread: after it finishes the
+    queued work, no thread the calls started is left running."""
+    import threading
+    import time
+
+    from topo2osm_spark.plans.pipeline import run_pipeline
+    bad = spark.range(3).withColumnRenamed("id", "doc_id")
+    before = set(threading.enumerate())
+    for _ in range(3):
+        with pytest.raises(Exception, match="spans"):
+            run_pipeline(spark, bad)
+    deadline = time.monotonic() + 120
+    while (set(threading.enumerate()) - before
+           and time.monotonic() < deadline):
+        time.sleep(0.2)
+    left = set(threading.enumerate()) - before
+    assert not left, f"threads left running: {sorted(t.name for t in left)}"
+
+
+def test_output_plans_truncated(pipeline_out):
+    """Stage checkpoints keep every output's analyzed plan small (at
+    most ~100 lines on this corpus); without them reused intermediates
+    are inlined into each consumer and plans reach tens of thousands
+    of lines."""
+    for name in ("nodes", "ways", "relations", "points", "integrity",
+                 "membership", "islands", "tile_assignments", "echo"):
+        tree = pipeline_out[name]._jdf.queryExecution().analyzed().treeString()
+        n_lines = len(tree.splitlines())
+        assert n_lines < 1000, f"{name}: analyzed plan has {n_lines} lines"
+
+
 def _plan_nodes(node, out, in_cache=False):
     """Walk an executed physical plan through AQE wrappers and query
     stages; collect (class name, inside-a-cached-relation, node). An

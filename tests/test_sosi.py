@@ -95,11 +95,13 @@ def test_arrow_batch_roundtrip():
         schema=pa.schema([pa.field("doc_id", pa.string()),
                           pa.field("span_idx", pa.int32()),
                           pa.field("text", pa.string())]))
-    out = list(sosi.tokenize_arrow_batches([batch]))
+    out = list(sosi.tokenize_project_assemble_batches([batch]))
     assert len(out) == 1
-    tbl = out[0].to_pydict()
-    assert len(tbl["doc_id"]) == 8  # 4 objects × 2 docs
-    assert set(tbl["doc_id"]) == {"d1", "d2"}
+    objs = [d for d, k in zip(out[0].column("doc_id").to_pylist(),
+                              out[0].column("row_kind").to_pylist())
+            if k == "obj"]
+    assert len(objs) == 8  # 4 objects × 2 docs
+    assert set(objs) == {"d1", "d2"}
 
 
 def test_parse_tekst_streng():

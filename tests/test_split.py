@@ -126,8 +126,7 @@ def test_pipeline_splits_long_ring_end_to_end(spark):
     docs = spark.createDataFrame(
         [("big-ring", [{"kind": "sosi", "text": "\n".join(buf),
                         "media_ref": "", "offset": 1}])], DOCUMENTS)
-    out = run_pipeline(spark, docs, run_pip=False, run_tiles=False,
-                       persist=False)
+    out = run_pipeline(spark, docs, run_pip=False, run_tiles=False)
     ways = out["ways"].collect()
     emit_ways = [w for w in ways if w["emit"]]
     assert len(emit_ways) == 2  # 2501 nodes -> ceil(2500/1999) = 2 parts

@@ -20,7 +20,9 @@ def test_streaming_prefix_matches_batch(spark, docs_df, tmp_path):
     from topo2osm_spark.plans.pipeline import explode_spans
     from topo2osm_spark.sources import sosi
     spans = explode_spans(spark.read.parquet(inp))
-    batch = sosi.tokenize_spans(spans.where(F.col("kind") == "sosi"))
+    batch = (sosi.tokenize_project_assemble_spans(
+                 spans.where(F.col("kind") == "sosi"))
+             .where(F.col("row_kind") == "obj"))
     want = {(r["doc_id"], r["span_idx"], r["obj_kind"], r["obj_id"])
             for r in batch.collect()}
     assert got == want and len(got) > 0

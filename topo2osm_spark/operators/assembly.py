@@ -8,11 +8,14 @@ normalize orientation (outer CCW / holes CW per the OSM multipolygon
 convention) [U: topo2osm.py::polygon/ring assembly + area check;
 mount empty, SURVEY.md §0].
 
-Spark shape: explode(refs) -> equi-join curves on (doc_id, span_idx,
-obj_id) -> groupBy(doc_id, span_idx, flate_id).applyInPandas. The
-grouped UDF sorts its input internally (never relies on shuffle
-order — determinism contract, SURVEY.md §4.2.5) and does all chain
-math in numpy.
+Where it runs: _assemble_one chains one FLATE's rings in numpy. The
+fused parse kernel (sources/sosi.tokenize_project_assemble_spans)
+calls it span-locally for every self-contained FLATE;
+assemble_rings_docwide is the shuffle fallback for FLATEs whose refs
+cross spans: explode(refs) -> join curves on (doc_id, curve_id) ->
+groupBy(doc_id, span_idx, flate_id) -> mapInPandas. The kernel sorts
+its parts by ref position (never relies on shuffle order —
+determinism contract, SURVEY.md §4.2.5).
 """
 
 from __future__ import annotations
@@ -135,41 +138,7 @@ def _assemble_batches(it):
                else pd.DataFrame(columns=cols))
 
 
-def assemble_rings(flates: DataFrame, curves: DataFrame) -> DataFrame:
-    """flates: PARSED_OBJECTS+lats/lons rows with obj_kind=FLATE;
-    curves: same with obj_kind=KURVE. Returns ASSEMBLED_RINGS.
-
-    Orphan refs (missing curves) drop out of the inner join — they are
-    surfaced separately by integrity_report (op 18)."""
-    refs = (flates
-            .select("doc_id", "span_idx",
-                    F.col("obj_id").alias("flate_id"),
-                    F.col("objtype").alias("flate_objtype"),
-                    F.posexplode(F.arrays_zip("refs", "hole_group"))
-                     .alias("ref_pos", "rh"))
-            .select("doc_id", "span_idx", "flate_id", "flate_objtype",
-                    "ref_pos",
-                    F.col("rh.refs").alias("ref"),
-                    F.col("rh.hole_group").alias("hole_group"),
-                    F.abs(F.col("rh.refs")).alias("curve_id")))
-    c = curves.select("doc_id", "span_idx",
-                      F.col("obj_id").alias("curve_id"),
-                      F.col("lats").alias("c_lats"),
-                      F.col("lons").alias("c_lons"))
-    joined = refs.join(c, ["doc_id", "span_idx", "curve_id"], "inner")
-    # one hash-agg row per FLATE, then batch assembly in mapInPandas —
-    # avoids the per-group Python round-trip of applyInPandas (matters
-    # at millions of small groups)
-    grouped = (joined.groupBy("doc_id", "span_idx", "flate_id")
-               .agg(F.first("flate_objtype").alias("flate_objtype"),
-                    F.collect_list(F.struct(
-                        "ref_pos", "ref", "hole_group",
-                        "c_lats", "c_lons")).alias("parts")))
-    return grouped.mapInPandas(_assemble_batches, ASSEMBLED_RINGS)
-
-
-def assemble_rings_docwide(flates: DataFrame, curves: DataFrame,
-                           broadcast_refs: bool | None = None) -> DataFrame:
+def assemble_rings_docwide(flates: DataFrame, curves: DataFrame) -> DataFrame:
     """Document-wide ring assembly for FLATEs whose ..REF list crosses
     span boundaries (the fused span-local kernel defers these via
     n_orphan_refs > 0 — sources/sosi.py).
@@ -182,21 +151,20 @@ def assemble_rings_docwide(flates: DataFrame, curves: DataFrame,
     self-contained flate that merely carries a truly-missing ref
     assembles exactly as the span-local kernel would have.
 
-    broadcast_refs gates the broadcast hint on the deferred-ref set
-    (r6; the same policy as the pipeline's snap_broadcast): the set is
-    tiny on self-contained corpora, but its size is DATA-DEPENDENT —
-    on a corpus where cross-span documents are the norm (exactly when
-    this fallback fires) it is an exploded corpus-scaled table, and an
-    unconditional F.broadcast() would OOM the driver. None (default)
-    hints only when AQE is off (stats-free local plans where the set
-    is known-tiny); with AQE on, no hint — the runtime promotes to
-    broadcast from real stage stats when the set really is small, and
-    keeps a shuffle join when it is not. Truly-missing refs drop out
-    of the inner join and surface in integrity_report as before."""
+    The deferred-ref set gets a broadcast hint only when AQE is off
+    (the same policy as the pipeline's snap-map joins): the set is tiny
+    on self-contained corpora, but its size is DATA-DEPENDENT — on a
+    corpus where cross-span documents are the norm (exactly when this
+    fallback fires) it is an exploded corpus-scaled table, and an
+    unconditional F.broadcast() would OOM the driver. Without AQE the
+    plans are stats-free local ones where the set is known-tiny; with
+    AQE on, no hint — the runtime promotes to broadcast from real
+    stage stats when the set really is small, and keeps a shuffle join
+    when it is not. Truly-missing refs drop out of the inner join and
+    surface in integrity_report as before."""
     from pyspark.sql import Window
-    if broadcast_refs is None:
-        broadcast_refs = str(flates.sparkSession.conf.get(
-            "spark.sql.adaptive.enabled", "true")).lower() != "true"
+    hint = str(flates.sparkSession.conf.get(
+        "spark.sql.adaptive.enabled", "true")).lower() != "true"
     refs = (flates
             .select("doc_id", "span_idx",
                     F.col("obj_id").alias("flate_id"),
@@ -213,7 +181,7 @@ def assemble_rings_docwide(flates: DataFrame, curves: DataFrame,
                       F.col("obj_id").alias("curve_id"),
                       F.col("lats").alias("c_lats"),
                       F.col("lons").alias("c_lons"))
-    joined = c.join(F.broadcast(refs) if broadcast_refs else refs,
+    joined = c.join(F.broadcast(refs) if hint else refs,
                     ["doc_id", "curve_id"], "inner")
     w = (Window.partitionBy("doc_id", "span_idx", "flate_id", "ref_pos")
          .orderBy((F.col("c_span_idx") == F.col("span_idx")).desc(),

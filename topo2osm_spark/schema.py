@@ -22,7 +22,7 @@ DOCUMENTS = T.StructType([
     T.StructField("spans", T.ArrayType(SPAN), False),
 ])
 
-# Output of the SOSI tokenizer (mapInArrow): one row per parsed object.
+# One parsed SOSI object, as sources/sosi.parse_fragment returns it.
 # coords are meters in the span's UTM zone: [north, east] or [north,
 # east, height]; kp marks junction-point coordinate indices; refs /
 # hole_group only for FLATE (parallel arrays, hole_group 0 = outer).
@@ -43,11 +43,9 @@ PARSED_OBJECTS = T.StructType([
     T.StructField("enhet", T.DoubleType(), False),
 ])
 
-# Reprojected objects (fused tokenize+project output): raw coords are
-# consumed inside the fused kernel and dropped — lats/lons parallel
-# arrays + the scalar NØH height replace them. (The composable
-# operators/reproject.reproject path yields PARSED_OBJECTS + these
-# three columns, a superset.)
+# Reprojected objects (the object rows of the fused kernel below): raw
+# coords are consumed inside the kernel and dropped — lats/lons
+# parallel arrays + the scalar NØH height replace them.
 GEO_OBJECTS = T.StructType(
     [f for f in PARSED_OBJECTS.fields if f.name != "coords"] + [
         T.StructField("lats", T.ArrayType(T.DoubleType()), True),

@@ -13,12 +13,15 @@ behavior [U: topo2osm.py::file reader / object parser]):
     .SLUTT
 
 Exposed two ways:
-  * parse_fragment(text)   — pure-Python single fragment (tests, small)
-  * tokenize_spans(df)     — Spark mapInArrow operator: batches of
-    exploded sosi spans in, PARSED_OBJECTS rows out. The Python loop
-    is per-span within an Arrow batch (batch-granular, not a per-row
-    Spark UDF); the coordinate hot path is np.fromstring over the
-    joined coordinate block, which is where ~90% of the bytes are.
+  * parse_fragment(text)   — pure-Python single fragment (the reference
+    for tests and small inputs)
+  * tokenize_project_assemble_spans(df) — the one Spark operator: a
+    mapInArrow pass that parses, reprojects to WGS84 and assembles
+    FLATE rings for batches of exploded sosi spans (GEO_WITH_RINGS
+    rows out). The Python loop is per-span within an Arrow batch
+    (batch-granular, not a per-row Spark UDF); the coordinate hot path
+    is one numpy parse over the joined coordinate block, which is
+    where ~90% of the bytes are.
 
 Coordinates are emitted in meters ([north, east] or [north, east,
 height]) after applying ENHET scale and ORIGO offset, matching the
@@ -53,33 +56,13 @@ def _parse_header(text: str) -> dict:
     return hdr
 
 
-def _parse_coord_block(lines: list[str], enhet: float, origo_n: float,
-                       origo_e: float,
-                       pre_split: bool = False) -> tuple[np.ndarray, list[int]]:
-    """Coordinate lines (+ interleaved ...KP markers) -> (coords, kp).
-    coords is an (n, 2|3) float64 ndarray — the numpy form feeds the
-    fused parse+project kernel without a list round-trip.
-
-    pre_split=True (r6 hot path): `lines` is (num_rows, kp) already
-    classified by the caller's line dispatch — parse_fragment knows
-    which lines are KP markers vs coordinate rows the moment it
-    appends them, so re-scanning here was a second pass over ~90% of
-    the fragment bytes."""
-    if pre_split:
-        num_rows, kp = lines
-    else:
-        kp = []
-        num_rows = []
-        for ln in lines:
-            if ln.startswith("...KP"):
-                if num_rows:
-                    # KP marks the immediately preceding coordinate
-                    kp.append(len(num_rows) - 1)
-                continue
-            if _NUM_LINE_RE.match(ln):
-                num_rows.append(ln)
+def _parse_coord_block(num_rows: list[str], enhet: float, origo_n: float,
+                       origo_e: float) -> np.ndarray:
+    """Coordinate rows -> an (n, 2|3) float64 ndarray in meters — the
+    numpy form feeds the fused parse+project kernel without a list
+    round-trip."""
     if not num_rows:
-        return np.empty((0, 2)), kp
+        return np.empty((0, 2))
     # hot path: one parse over the joined block when width is uniform
     width = len(num_rows[0].split())
     blob = " ".join(num_rows)
@@ -97,7 +80,7 @@ def _parse_coord_block(lines: list[str], enhet: float, origo_n: float,
     out[:, 1] = origo_e + arr[:, 1] * enhet
     if width > 2:
         out[:, 2] = arr[:, 2] * enhet
-    return out, kp
+    return out
 
 
 def _parse_refs(ref_text: str) -> tuple[list[int], list[int]]:
@@ -174,9 +157,8 @@ def parse_fragment(text: str, doc_id: str = "", span_idx: int = 0,
                     kp_marks.append(len(num_rows) - 1)
             else:
                 mode = None  # .SLUTT or unknown group
-        coords, kp = _parse_coord_block(
-            (num_rows, kp_marks), hdr["enhet"], hdr["origo_n"],
-            hdr["origo_e"], pre_split=True)
+        coords = _parse_coord_block(num_rows, hdr["enhet"],
+                                    hdr["origo_n"], hdr["origo_e"])
         refs, hole_group = _parse_refs(" ".join(ref_parts)) if ref_parts else ([], [])
         out.append({
             "doc_id": doc_id,
@@ -186,7 +168,7 @@ def parse_fragment(text: str, doc_id: str = "", span_idx: int = 0,
             "objtype": objtype,
             "streng": streng,
             "coords": coords if as_numpy else coords.tolist(),
-            "kp": kp,
+            "kp": kp_marks,
             "refs": refs,
             "hole_group": hole_group,
             "koordsys": hdr["koordsys"],
@@ -195,6 +177,8 @@ def parse_fragment(text: str, doc_id: str = "", span_idx: int = 0,
     return out
 
 
+# Arrow mirror of schema.GEO_WITH_RINGS: object rows (row_kind 'obj',
+# ring columns null) and ring rows (row_kind 'ring').
 _ARROW_SCHEMA = pa.schema([
     pa.field("doc_id", pa.string(), False),
     pa.field("span_idx", pa.int32(), False),
@@ -202,52 +186,36 @@ _ARROW_SCHEMA = pa.schema([
     pa.field("obj_id", pa.int64(), False),
     pa.field("objtype", pa.string()),
     pa.field("streng", pa.string()),
-    pa.field("coords", pa.list_(pa.list_(pa.float64()))),
     pa.field("kp", pa.list_(pa.int32())),
     pa.field("refs", pa.list_(pa.int64())),
     pa.field("hole_group", pa.list_(pa.int32())),
     pa.field("koordsys", pa.int32(), False),
     pa.field("enhet", pa.float64(), False),
+    pa.field("lats", pa.list_(pa.float64())),
+    pa.field("lons", pa.list_(pa.float64())),
+    pa.field("height", pa.float64()),
+    pa.field("row_kind", pa.string(), False),   # 'obj' | 'ring'
+    pa.field("flate_id", pa.int64()),
+    pa.field("ring_idx", pa.int32()),
+    pa.field("is_hole", pa.bool_()),
+    pa.field("closed", pa.bool_()),
+    pa.field("area", pa.float64()),
+    pa.field("n_curves", pa.int32()),
+    pa.field("n_orphan_refs", pa.int32()),
 ])
-
-
-def tokenize_arrow_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel: (doc_id, span_idx, text) batches ->
-    PARSED_OBJECTS batches."""
-    for batch in batches:
-        doc_ids = batch.column("doc_id").to_pylist()
-        span_idxs = batch.column("span_idx").to_pylist()
-        texts = batch.column("text").to_pylist()
-        rows: list[dict] = []
-        for d, s, t in zip(doc_ids, span_idxs, texts):
-            if t:
-                rows.extend(parse_fragment(t, d, s))
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=_ARROW_SCHEMA)
-
-
-def tokenize_spans(spans_df):
-    """Spark operator: DataFrame(doc_id, span_idx, text) ->
-    DataFrame(PARSED_OBJECTS). Narrow (no shuffle); Python boundary #1
-    of the pipeline (SURVEY.md §3.2 S2)."""
-    from topo2osm_spark.schema import PARSED_OBJECTS
-    return spans_df.select("doc_id", "span_idx", "text").mapInArrow(
-        tokenize_arrow_batches, PARSED_OBJECTS)
-
-
-_GEO_ARROW_SCHEMA = pa.schema(
-    [f for f in _ARROW_SCHEMA if f.name != "coords"]
-    + [pa.field("lats", pa.list_(pa.float64())),
-       pa.field("lons", pa.list_(pa.float64())),
-       pa.field("height", pa.float64())])
 
 
 def _project_batch_rows(batch: pa.RecordBatch) -> tuple[list[dict], list[tuple]]:
     """Parse + reproject one Arrow batch. Returns (rows, spans) where
     rows are GEO-shaped dicts (lats/lons as python lists) and spans is
     [(doc_id, span_idx, lo, hi)] row-slice bookkeeping per input span —
-    the hook that lets the assembly-fused kernel regroup a span's
-    objects without a shuffle."""
+    the hook that lets the fused kernel regroup a span's objects
+    without a shuffle.
+
+    Per batch: parse every fragment (coords stay numpy), flatten all
+    coordinates into ONE array, one Krueger-series ufunc pass, re-split
+    by offsets. Also extracts the scalar NØH height (contours carry a
+    constant height per curve)."""
     from topo2osm_spark.functions import proj
     zmap = proj.SOSI_KOORDSYS_TO_ZONE
     doc_ids = batch.column("doc_id").to_pylist()
@@ -286,61 +254,23 @@ def _project_batch_rows(batch: pa.RecordBatch) -> tuple[list[dict], list[tuple]]
     return rows, spans
 
 
-def tokenize_project_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """FUSED S2+S3 kernel: parse AND reproject inside one Python pass.
-
-    The coordinate block (~90% of the bytes) is the heaviest column in
-    the pipeline; the unfused path serialized it JVM->Python (parse) ->
-    JVM -> Python (project) -> JVM. Fusing removes one full Arrow
-    round-trip of that column and the per-stage runner handshake —
-    measured as the dominant non-scaling cost in BENCH/BASELINE.md r1.
-    Per batch: parse every fragment (coords stay numpy), flatten all
-    coordinates into ONE array, one Krueger-series ufunc pass, re-split
-    by offsets. Also extracts the scalar NØH height (contours carry a
-    constant height per curve)."""
-    for batch in batches:
-        rows, _ = _project_batch_rows(batch)
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=_GEO_ARROW_SCHEMA)
-
-
-def tokenize_project_spans(spans_df):
-    """Fused Spark operator: spans -> GEO_OBJECTS in one mapInArrow
-    (Python boundary #1 AND #2 of SURVEY.md §3.2 collapsed). The
-    unfused tokenize_spans + operators/reproject.reproject remain the
-    composable API; the pipeline uses this for throughput."""
-    from topo2osm_spark.schema import GEO_OBJECTS
-    return spans_df.select("doc_id", "span_idx", "text").mapInArrow(
-        tokenize_project_batches, GEO_OBJECTS)
-
-
-_RING_EXTRA_FIELDS = [
-    pa.field("row_kind", pa.string(), False),   # 'obj' | 'ring'
-    pa.field("flate_id", pa.int64()),
-    pa.field("ring_idx", pa.int32()),
-    pa.field("is_hole", pa.bool_()),
-    pa.field("closed", pa.bool_()),
-    pa.field("area", pa.float64()),
-    pa.field("n_curves", pa.int32()),
-    pa.field("n_orphan_refs", pa.int32()),
-]
-_GEO_RINGS_ARROW_SCHEMA = pa.schema(
-    list(_GEO_ARROW_SCHEMA) + _RING_EXTRA_FIELDS)
-
-
 def tokenize_project_assemble_batches(
         batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """FUSED S2+S3+S4 kernel: parse, reproject AND assemble rings in
     one Python pass.
 
+    The coordinate block (~90% of the bytes) is the heaviest column in
+    the pipeline; parsing, projecting and assembling in one pass means
+    it crosses the JVM/Python boundary once each way, with one runner
+    handshake per batch.
+
     A SELF-CONTAINED SOSI fragment's FLATE only references curves of
     its own span, so chaining the rings while the span's objects are
-    still resident in the parse worker replaces the refs->curves
-    equi-join + per-FLATE regroup of operators/assembly.py (a shuffle
-    of the entire curve coordinate column back to where it already
-    was) with span-local numpy. The standalone assemble_rings operator
-    remains the composable API; semantics are identical (same
-    _assemble_one kernel).
+    still resident in the parse worker replaces a refs->curves
+    equi-join + per-FLATE regroup (a shuffle of the entire curve
+    coordinate column back to where it already was) with span-local
+    numpy, using the same _assemble_one kernel as the document-wide
+    fallback.
 
     Cross-span refs are NOT silently dropped (VERDICT r4 #2): every
     FLATE's orphan refs (no curve with that id in the SAME span) are
@@ -401,7 +331,7 @@ def tokenize_project_assemble_batches(
                                "koordsys": fl["koordsys"],
                                "enhet": fl["enhet"]})
         yield pa.RecordBatch.from_pylist(rows + ring_rows,
-                                         schema=_GEO_RINGS_ARROW_SCHEMA)
+                                         schema=_ARROW_SCHEMA)
 
 
 def tokenize_project_assemble_spans(spans_df):

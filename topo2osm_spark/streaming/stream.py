@@ -2,9 +2,9 @@
 
 The reference is a one-shot batch converter; the north rule demands a
 resumable batch job (covered by sources/warehouse.py). This module
-exists because the stateless pipeline PREFIX — span explode -> SOSI
-tokenize -> reproject -> cell encode — runs unchanged under
-Structured Streaming: the same narrow operators compose over
+exists because the stateless pipeline PREFIX — span explode -> the
+fused SOSI parse/reproject/span-local assembly pass — runs unchanged
+under Structured Streaming: the same narrow operators compose over
 readStream, giving an incremental-ingest path for a documents table
 that grows continuously. Joins/aggregations past the prefix would
 need watermark design and are deliberately out of scope (documented,
@@ -19,24 +19,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from topo2osm_spark.schema import DOCUMENTS
+from topo2osm_spark.schema import DOCUMENTS, GEO_OBJECTS
 
 
 def stream_parse_prefix(spark: SparkSession, input_dir: str) -> DataFrame:
     """readStream over a parquet documents directory -> parsed +
-    reprojected geometry objects (the stateless pipeline prefix)."""
-    from topo2osm_spark.operators.reproject import reproject
+    reprojected geometry objects (the stateless pipeline prefix): the
+    object rows of the pipeline's fused kernel, GEO_OBJECTS columns."""
+    from topo2osm_spark.plans.pipeline import explode_spans
     from topo2osm_spark.sources import sosi
 
     docs = (spark.readStream.schema(DOCUMENTS)
             .option("maxFilesPerTrigger", 8)
             .parquet(input_dir))
-    spans = docs.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span")
-    ).select("doc_id", "span_idx", "span.kind", "span.text",
-             "span.media_ref", "span.offset")
-    parsed = sosi.tokenize_spans(spans.where(F.col("kind") == "sosi"))
-    return reproject(parsed)
+    spans = explode_spans(docs)
+    geo = sosi.tokenize_project_assemble_spans(
+        spans.where(F.col("kind") == "sosi"))
+    return (geo.where(F.col("row_kind") == "obj")
+            .select(*GEO_OBJECTS.fieldNames()))
 
 
 def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
