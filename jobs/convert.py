@@ -115,7 +115,7 @@ def main() -> int:
             n_docs = docs.count()
         stage_secs["input_count"] = round(time.monotonic() - tc, 2)
     # materialize the shared core once (the persisted chain up to the
-    # node table), then run the five output writes as CONCURRENT Spark
+    # node table), then run the eight output writes as CONCURRENT Spark
     # jobs — they only touch cached intermediates, and overlapping them
     # hides the scheduler/Python-runner latency of each tail.
     t1 = time.monotonic()
@@ -138,13 +138,14 @@ def main() -> int:
     # materialized that cache — otherwise both jobs recompute the
     # split chain concurrently.
     wc = int(os.environ.get("SPARK_GRAFT_WRITE_CONCURRENCY", "2"))
-    for wave in (("nodes", "ways"),
-                 ("relations", "tile_assignments", "echo", "points")):
+    waves = (("nodes", "ways"),
+             ("relations", "tile_assignments", "echo", "points",
+              "membership", "islands"))
+    for wave in waves:
         with ThreadPoolExecutor(max_workers=max(1, wc)) as ex:
             for name, secs in ex.map(write_one, wave):
                 stage_secs[name] = secs
-    names = ("nodes", "ways", "relations", "tile_assignments", "echo",
-             "points")
+    names = waves[0] + waves[1]
     if args.xml:
         from topo2osm_spark.sources import osm_xml
         tx = time.monotonic()
@@ -169,12 +170,21 @@ def main() -> int:
                    .agg(F.count(F.lit(1)).alias("n")))
         metrics.write.mode("overwrite").parquet(os.path.join(args.out, "_metrics"))
     wall = time.monotonic() - t0
+    # jobs this run started, and the stages that ran tasks (a stage
+    # whose shuffle output was reused is listed by its job but skipped)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup()]
+    stages = [tracker.getStageInfo(s)
+              for s in {s for j in jobs if j for s in j.stageIds}]
     print(json.dumps({
         "n_docs": n_docs, "wall_sec": round(wall, 2),
         "docs_per_sec": round(n_docs / wall, 2),
         "stage_write_secs": stage_secs, "counts": counts,
         "master": spark.sparkContext.master,
         "resumed": bool(args.resume),
+        "spark_jobs": len(jobs),
+        "spark_stages": sum(1 for st in stages
+                            if st and st.numCompletedTasks > 0),
     }))
     spark.stop()
     return 0

@@ -422,3 +422,52 @@ def test_pip_runs_once(pipeline_out):
         builders.append({s.relation().cacheBuilder() for s in scans})
     assert builders[0] & builders[1], \
         "membership and islands read different cached relations"
+
+
+def _jobs(spark) -> list[dict]:
+    """Every job in Spark's status store (the store behind its UI), as
+    JSON: id, description, submission time in epoch ms."""
+    import json
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    mapper.registerModule(getattr(jvm.com.fasterxml.jackson.module.scala,
+                                  "DefaultScalaModule$").__getattr__("MODULE$"))
+    seq = sc._jsc.sc().statusStore().jobsList(None)
+    return json.loads(mapper.writeValueAsString(seq))
+
+
+def test_pipeline_jobs_named_after_stage(spark, docs_df):
+    """Every job submitted before run_pipeline returns carries a
+    `topo2osm:<stage>` description, and the caller's own description is
+    back in place afterwards."""
+    import time
+
+    from topo2osm_spark.plans.pipeline import run_pipeline
+    sc = spark.sparkContext
+    before = max((j["jobId"] for j in _jobs(spark)), default=-1)
+    sc.setJobDescription("caller")
+    try:
+        run_pipeline(spark, docs_df, run_pip=False, run_tiles=False)
+        returned_ms = time.time() * 1000
+        spark.range(1).count()
+    finally:
+        sc.setJobDescription(None)
+    # the status store is fed asynchronously, in submission order: once
+    # the caller's job is there, every earlier job is too
+    deadline = time.monotonic() + 60
+    while True:
+        jobs = [j for j in _jobs(spark) if j["jobId"] > before]
+        caller = [j for j in jobs if j.get("description") == "caller"]
+        if caller or time.monotonic() > deadline:
+            break
+        time.sleep(0.2)
+    assert caller, "the caller's job is not described 'caller'"
+    first_caller = min(j["jobId"] for j in caller)
+    planning = [j for j in jobs if j["submissionTime"] <= returned_ms
+                and j["jobId"] < first_caller]
+    assert planning, "run_pipeline started no job while planning"
+    unnamed = [(j["jobId"], j.get("description"), j["name"])
+               for j in planning
+               if not str(j.get("description")).startswith("topo2osm:")]
+    assert not unnamed, f"jobs not named after a stage: {unnamed}"

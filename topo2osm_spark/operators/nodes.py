@@ -90,8 +90,10 @@ def snap_mapping(nodes: DataFrame, tol_m: float = 0.5,
        higher-order functions over the (tiny minority of) multi-node
        bins -> an edge per merge candidate, distinct across grids;
     3. connected components by `iterations` rounds of min-label
-       propagation over the edge set — edge-count-sized joins, fully
-       distributed, no driver union-find.
+       propagation over the symmetric edge set — each round is one
+       edge-count-sized join of the edges with the previous labels and
+       a min per node, so the plan grows linearly with the rounds;
+       fully distributed, no driver union-find.
 
     g_lon uses cos(max_abs_lat) so the bin guarantee holds at the
     highest latitude in the data. Two ways to establish that bound,
@@ -159,48 +161,44 @@ def snap_mapping(nodes: DataFrame, tol_m: float = 0.5,
              .agg(F.collect_list(F.struct("node_id", "lat", "lon")).alias("pts"))
              .select("pts"))
 
-    # all i<j pairs within a bin: nested transform + flatten, then the
-    # planar tolerance test in codegen. lo/hi-ordered so each edge
-    # appears once per containing bin; distinct() collapses the 4-grid
-    # replication.
+    # all ordered pairs x != y within a bin: nested transform + flatten,
+    # then the planar tolerance test in codegen. Each edge is emitted in
+    # both directions, so the edge set is symmetric without a union,
+    # and distinct() collapses the 4-grid replication.
     pts = F.col("pts")
     pairs = F.flatten(F.transform(
-        pts, lambda x, i: F.transform(
-            F.slice(pts, i + 2, F.size(pts)),
+        pts, lambda x: F.transform(
+            F.filter(pts, lambda y: y["node_id"] != x["node_id"]),
             lambda y: F.struct(
-                F.least(x["node_id"], y["node_id"]).alias("lo"),
-                F.greatest(x["node_id"], y["node_id"]).alias("hi"),
+                x["node_id"].alias("node_id"),
+                y["node_id"].alias("nbr"),
                 ((x["lat"] - y["lat"]) * F.lit(_M_PER_DEG)).alias("dy"),
                 ((x["lon"] - y["lon"]) * F.lit(_M_PER_DEG)
                  * F.cos(F.radians((x["lat"] + y["lat"]) / F.lit(2.0)))).alias("dx")))))
-    edges = (multi
-             .select(F.explode(F.filter(
-                 pairs, lambda p: p["dy"] * p["dy"] + p["dx"] * p["dx"]
-                 <= F.lit(tol_m * tol_m))).alias("e"))
-             .select(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"))
-             .distinct())
+    edges_bi = (multi
+                .select(F.explode(F.filter(
+                    pairs, lambda p: p["dy"] * p["dy"] + p["dx"] * p["dx"]
+                    <= F.lit(tol_m * tol_m))).alias("e"))
+                .select("e.node_id", "e.nbr")
+                .distinct())
 
     # connected components by min-label propagation over the edge set
-    # (tiny: one row per actual merge candidate). Labels start as own
-    # id; each round takes the min over neighbors. Components within
-    # tolerance are geometrically tiny (2-4 nodes — SURVEY.md §7.3),
-    # so `iterations`+1 rounds converge; still fully distributed.
-    edges_bi = edges.unionByName(
-        edges.select(F.col("hi").alias("lo"), F.col("lo").alias("hi")))
-    labels = (edges_bi.groupBy(F.col("lo").alias("node_id"))
-              .agg(F.min("hi").alias("nbr_min"))
-              .select("node_id",
-                      F.least("node_id", "nbr_min").alias("canon_id")))
+    # (tiny: one row per actual merge candidate). Labels start as the
+    # min over the node and its neighbours; each round takes the min of
+    # the neighbours' labels, reading the previous labels once. That
+    # min already covers the node's own label: every labelled node has
+    # a neighbour and the edge set is symmetric, so after round r the
+    # neighbours' labels span the node's whole (r+2)-hop ball, own
+    # (r+1)-hop ball included. Components within tolerance are
+    # geometrically tiny (2-4 nodes — SURVEY.md §7.3), so
+    # `iterations`+1 rounds converge; still fully distributed.
+    labels = (edges_bi.groupBy("node_id")
+              .agg(F.least(F.col("node_id"), F.min("nbr")).alias("canon_id")))
     for _ in range(iterations):
-        nbr = (edges_bi.join(
-                   labels.select(F.col("node_id").alias("n2"), "canon_id"),
-                   F.col("hi") == F.col("n2"))
-               .groupBy(F.col("lo").alias("node_id"))
-               .agg(F.min("canon_id").alias("nbr_canon")))
-        labels = (labels.join(nbr, "node_id", "left")
-                  .select("node_id",
-                          F.least(F.coalesce("nbr_canon", "canon_id"),
-                                  F.col("canon_id")).alias("canon_id")))
+        labels = (edges_bi.join(
+                      labels.withColumnRenamed("node_id", "nbr"), "nbr")
+                  .groupBy("node_id")
+                  .agg(F.min("canon_id").alias("canon_id")))
     # Convergence hardening (two label-set-sized joins, no barrier):
     # 1. one pointer-jumping round: canon := canon(canon) — doubles the
     #    reachable chain depth, so tolerance chains up to ~6 nodes

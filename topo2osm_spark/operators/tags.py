@@ -3,8 +3,9 @@
 The frozen executable spec of the reference's static tag table
 [U: topo2osm.py::tag table; reference mount empty, SURVEY.md §0 —
 table reconstructed from the public N50->OSM import conventions].
-Applied as a BROADCAST hash join: the table is ~30 rows, so the big
-geometry side never shuffles for tagging.
+Applied as a literal map lookup (`create_map` + `element_at`): the
+table is 26 rows, so tagging is a column expression in the geometry
+side's own projection, with no join, broadcast or shuffle.
 
 Glue/boundary object types (FiktivDelelinje, Dataavgrensning) map to
 no tags and are dropped from way output — they exist only to close
@@ -14,8 +15,7 @@ polygons during assembly, matching the reference's behavior.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (BooleanType, MapType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import MapType, StringType
 
 # (objtype, geometry kind 'KURVE'|'FLATE', {tags}); None tags = drop.
 TAG_TABLE: list[tuple[str, str, dict | None]] = [
@@ -49,42 +49,28 @@ TAG_TABLE: list[tuple[str, str, dict | None]] = [
 ]
 
 
-# A StructType, not a DDL string: a DDL schema goes through the JVM's
-# SQL parser (ddlToJson) on every call, on the planning path.
-TAG_SCHEMA = StructType([
-    StructField("objtype", StringType()),
-    StructField("geom_kind", StringType()),
-    StructField("tags", MapType(StringType(), StringType())),
-    StructField("emit", BooleanType()),
-])
-
-
-def tag_df(spark: SparkSession) -> DataFrame:
-    """The tag table as a (objtype, geom_kind, tags map, emit bool)
-    DataFrame — broadcast side of the tag join."""
-    rows = [
-        (ot, gk,
-         dict(t) if t is not None else {},
-         t is not None)
-        for ot, gk, t in TAG_TABLE
-    ]
-    return spark.createDataFrame(rows, TAG_SCHEMA)
+_TAGS_TYPE = MapType(StringType(), StringType())
 
 
 def join_tags(df: DataFrame, spark: SparkSession, objtype_col: str = "objtype",
               kind_col: str = "geom_kind") -> DataFrame:
-    """Broadcast tag join. Unknown objtypes keep an empty tag map and
-    emit=false (the reference warns and skips unknown types)."""
-    t = tag_df(spark)
-    joined = df.join(
-        F.broadcast(t),
-        (df[objtype_col] == t["objtype"]) & (df[kind_col] == t["geom_kind"]),
-        "left",
-    ).drop(t["objtype"]).drop(t["geom_kind"])
-    no_tags = F.create_map().cast(TAG_SCHEMA["tags"].dataType)
-    return joined.withColumn(
-        "tags", F.coalesce(F.col("tags"), no_tags)
-    ).withColumn("emit", F.coalesce(F.col("emit"), F.lit(False)))
+    """Add `tags` (the row's TAG_TABLE map) and `emit` by a lookup in a
+    literal map from `objtype|geom_kind` (no table entry contains `|`)
+    to the tags of the emitting rows: a column expression, with no
+    DataFrame, join or broadcast job. A key not in the map (unknown
+    objtype, other geom_kind, a null in either part, or tags None) reads
+    null: an empty tag map and emit=false (the reference warns and
+    skips unknown types). `spark` is unused."""
+    table = F.create_map(*[
+        c for ot, gk, t in TAG_TABLE if t is not None
+        for c in (F.lit(f"{ot}|{gk}"),
+                  F.create_map(*[F.lit(x) for kv in t.items() for x in kv])
+                   .cast(_TAGS_TYPE))])
+    t = F.element_at(table, F.concat(F.col(objtype_col), F.lit("|"),
+                                     F.col(kind_col)))
+    return df.withColumn(
+        "tags", F.coalesce(t, F.create_map().cast(_TAGS_TYPE))
+    ).withColumn("emit", t.isNotNull())
 
 
 def with_ele(df: DataFrame, objtype_col: str = "objtype",

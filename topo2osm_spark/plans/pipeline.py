@@ -11,9 +11,9 @@ DataFrame DAG:
     no shuffle; see sources/sosi.tokenize_project_assemble_spans)
   S5 way-node explode, quantize, node dedup   — shuffle (hash agg)
   S6 kNN snap (binned JVM pair-gen + min-label
-     propagation over the edge set)           — shuffle
+     propagation, one labels read per round)  — shuffle
   S7 way re-collect (sorted by pos)           — shuffle
-  S8 broadcast tag join                       — no shuffle
+  S8 tag lookup (literal map, element_at)     — no join
   S9 PIP hit set (computed once, read by membership
      AND islands) + raster<->vector tile join — cell equi-joins
   S10 outputs: nodes/ways/relations/tile_assignments/echo/metrics
@@ -77,6 +77,9 @@ class _Prefetcher:
                 return
             name, df = item
             try:
+                # local properties are per thread: name this thread's jobs
+                df.sparkSession.sparkContext.setJobDescription(
+                    f"topo2osm:{name}")
                 df.count()
             except Exception as e:
                 # materialization errors surface on the caller's own
@@ -187,8 +190,14 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
     # media branch keeps its pruned parquet scan (ReadSchema
     # struct<kind,media_ref>) instead of a full cached-corpus read.
     docs_cached = warehouse is None and cache_docs is not False
+    # every job started on this thread while planning (stage writes,
+    # broadcast sides, which inherit the description) carries the name
+    # of the stage that started it; the caller's own is restored at exit
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
 
     def ck(df: DataFrame, name: str, *fp_parts) -> DataFrame:
+        sc.setJobDescription(f"topo2osm:{name}")
         if warehouse is not None:
             fp = fingerprint(name, *fp_parts, *ck_seq)
             df, _ = warehouse.stage(df, name, fp, resume=resume)
@@ -310,10 +319,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
             "way_id", content_id("doc_id", "span_idx", F.lit("F"), "flate_id", "ring_idx"))
 
         # standalone curve ways: curves whose objtype is tagged as a KURVE way
-        curve_tags = tags.tag_df(spark).where(
-            (F.col("geom_kind") == "KURVE") & F.col("emit"))
-        curve_ways = (curves.join(
-            F.broadcast(curve_tags.select("objtype")), "objtype", "left_semi")
+        curve_ways = (curves.where(F.col("objtype").isin(*[
+            ot for ot, gk, t in tags.TAG_TABLE if gk == "KURVE" and t is not None]))
             .withColumn("way_id", content_id("doc_id", "span_idx", F.lit("K"), "obj_id")))
 
         # unified way geometry (FLATE rings + tagged standalone curves);
@@ -393,7 +400,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
                                              | (x != F.element_at(nids, i)))
                                      .alias("node_ids")))
 
-        # S8: broadcast tag join on way metadata (+ ele from NØH heights),
+        # S8: tag lookup on way metadata (+ ele from NØH heights),
         # then split >max_way_nodes ways into chained parts sharing their
         # junction endpoint nodes (OSM 2000-node hard limit)
         way_meta = way_geoms.drop("lats", "lons")
@@ -456,8 +463,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
 
         # tagged point features (SURVEY.md §2 op 9): PUNKT objects
         # (Høydepunkt -> natural=peak) and TEKST elevation labels
-        # (Høydetall -> ele=<STRENG>), routed through the same broadcast
-        # tag join as ways. node_id goes through quantize+snap, so a label
+        # (Høydetall -> ele=<STRENG>), routed through the same tag lookup
+        # as ways. node_id goes through quantize+snap, so a label
         # sitting on a way vertex resolves to that vertex's canonical node.
         # Published lat/lon are the CANONICAL node's coordinates: the snap
         # map is enriched with the canon coords (snap-map-sized join
@@ -508,13 +515,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
             # unless a caller acts on them
             "_internal": {
                 "way_nodes": way_nodes,
-                "nodes_raw": nodes_raw,
                 "snap_map": snap_map,
                 "wn_snapped": wn,
-                "kp_snapped": kp_snapped,
                 "way_node_lists": way_node_lists,
                 "tagged_ways_presplit": ways_presplit,
-                "flates": flates,
                 "curves": curves,
             },
         }
@@ -554,6 +558,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
             if warehouse is not None:
                 hitm = ck(hitm, "pip_hits")
             else:
+                sc.setJobDescription("topo2osm:pip_hits")
                 hitm = hitm.persist(level)
                 pf.submit(hitm, "pip_hits")
             pt_meta = pts.select("pt_uid", "pt_doc", "pt_flate").join(
@@ -640,3 +645,4 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         # while planning would otherwise leave it blocked forever
         if pf is not None:
             pf.close()
+        sc.setJobDescription(caller_desc)
