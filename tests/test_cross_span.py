@@ -101,10 +101,9 @@ def test_self_contained_corpus_no_cross_span_issues(pipeline_out):
 
 
 def test_snap_chain_converges_6_nodes(spark):
-    """A 6-node within-tolerance chain with monotone ids (the worst
-    case for min-label propagation) must resolve to ONE canonical node
-    with the default iterations=2 — the pointer-jumping compression
-    round doubles the reachable depth (VERDICT r4 #4)."""
+    """A 6-node within-tolerance chain (2 m end to end, inside the
+    8*tol_m bound on a node's distance from its canon) must resolve to
+    ONE canonical node (VERDICT r4 #4)."""
     from topo2osm_spark.operators import nodes as nodeops
     dlat = 0.4 / 111320.0  # 0.4 m spacing, tol 0.5 m
     chain = spark.createDataFrame(
@@ -127,11 +126,10 @@ def test_snap_chain_too_deep_raises(spark):
         nodeops.snap_mapping(chain, tol_m=0.5, max_abs_lat=72.0).collect()
 
 
-def test_with_canon_coords_matches_output_node_table(spark):
-    """The enriched snap map's (c_lat, c_lon) must equal the OUTPUT
-    node table's coordinates for the same canon_id — consumers joining
-    points to nodes on node_id never see divergent positions (r5 moved
-    this enrichment inside the checkpointed snap_map stage)."""
+def test_snap_map_canon_coords_match_output_node_table(spark):
+    """The snap map's (c_lat, c_lon) must equal the OUTPUT node table's
+    coordinates for the same canon_id — consumers joining points to
+    nodes on node_id never see divergent positions."""
     from topo2osm_spark.operators import nodes as nodeops
 
     pts = spark.createDataFrame(
@@ -140,14 +138,13 @@ def test_with_canon_coords_matches_output_node_table(spark):
         "lat double, lon double")
     raw = nodeops.dedup_nodes(pts)
     mapping = nodeops.snap_mapping(raw, tol_m=0.5, max_abs_lat=72.0)
-    enriched = nodeops.with_canon_coords(mapping, raw)
-    out = nodeops.snap_nodes_table(raw, enriched)
+    out = nodeops.snap_nodes_table(raw, mapping)
     out_coords = {r["node_id"]: (r["lat"], r["lon"]) for r in out.collect()}
-    rows = enriched.collect()
+    rows = mapping.collect()
     assert rows, "the 3e-7-degree pair must produce a mapping row"
     for r in rows:
         assert (r["c_lat"], r["c_lon"]) == out_coords[r["canon_id"]]
-    # apply_snap must not leak the enrichment columns into its output
+    # apply_snap must not leak the canon coordinate columns into its output
     snapped = nodeops.apply_snap(
-        raw.select("node_id"), enriched)
+        raw.select("node_id"), mapping)
     assert set(snapped.columns) == {"node_id"}

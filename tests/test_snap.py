@@ -1,8 +1,11 @@
 """The kNN tolerance snap (operators/nodes.snap_mapping) against a
-pure-Python union-find on seeded random clusters."""
+pure-Python union-find on seeded random clusters, and on a chain whose
+ids are not monotone along it."""
 
 import math
 import random
+
+import pytest
 
 from topo2osm_spark.operators import nodes as nodeops
 
@@ -55,8 +58,9 @@ def _union_find_mapping(rows):
     return {i: find(i) for i, _, _ in rows if find(i) != i}
 
 
-def test_snap_matches_union_find(spark):
-    rows = _clusters()
+@pytest.mark.parametrize("seed", range(10))
+def test_snap_matches_union_find(spark, seed):
+    rows = _clusters(seed=seed)
     want = _union_find_mapping(rows)
     assert len(want) > 100  # most nodes merge into their cluster's min
     raw = spark.createDataFrame(rows, "node_id long, lat double, lon double")
@@ -65,13 +69,35 @@ def test_snap_matches_union_find(spark):
     assert got == want
 
 
+def test_snap_carries_canon_coords(spark):
+    """Each mapping row carries its canon's own input coordinate."""
+    rows = _clusters()
+    coords = {i: (lat, lon) for i, lat, lon in rows}
+    raw = spark.createDataFrame(rows, "node_id long, lat double, lon double")
+    got = nodeops.snap_mapping(raw, tol_m=TOL_M, max_abs_lat=72.0).collect()
+    assert got
+    assert all((r["c_lat"], r["c_lon"]) == coords[r["canon_id"]] for r in got)
+
+
+def test_snap_chain_with_shuffled_ids_has_one_canon(spark):
+    """A 5-node chain 0.4 m apart whose min id sits at one end and the
+    next-smallest at the other: every node maps to the min, none is
+    left as a second canon."""
+    dlat = 0.4 / _M
+    ids = [1, 50, 40, 30, 2]
+    chain = spark.createDataFrame(
+        [(i, 60.0 + k * dlat, 10.0) for k, i in enumerate(ids)],
+        "node_id long, lat double, lon double")
+    m = {(r["node_id"], r["canon_id"]) for r in
+         nodeops.snap_mapping(chain, tol_m=TOL_M, max_abs_lat=72.0).collect()}
+    assert m == {(2, 1), (30, 1), (40, 1), (50, 1)}
+
+
 def test_snap_plan_stays_small(spark):
-    """Each propagation round reads the previous labels once and the
-    edge set is one subtree, so the enriched snap map's analyzed plan
-    grows linearly with the rounds."""
+    """The snap map, canon coordinates included, is one candidate search
+    and one grouped call: its analyzed plan is 21 lines."""
     raw = spark.createDataFrame(_clusters(),
                                 "node_id long, lat double, lon double")
-    m = nodeops.with_canon_coords(
-        nodeops.snap_mapping(raw, tol_m=TOL_M, max_abs_lat=72.0), raw)
+    m = nodeops.snap_mapping(raw, tol_m=TOL_M, max_abs_lat=72.0)
     n_lines = len(m._jdf.queryExecution().analyzed().treeString().splitlines())
-    assert n_lines < 400, f"snap map analyzed plan has {n_lines} lines"
+    assert n_lines < 30, f"snap map analyzed plan has {n_lines} lines"

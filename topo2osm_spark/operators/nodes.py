@@ -13,18 +13,18 @@ every way computes its node ids locally (map-side); the `nodes`
 table is a groupBy over the quantized key. The reference's implicit
 hash-dict becomes a hash *function* — zero shuffle on the way side.
 
-op 13 (tolerance snap) is the cell-neighborhood kNN join: nodes are
-keyed to a snap-resolution cell, one side expands to its 3×3 k-ring
-(9-way map-side explode), the equi-join on cell yields candidate
-pairs, haversine refines within tolerance, and connected components
-are resolved by iterative min-label propagation (fully distributed —
-no driver-side union-find). Components wider than `iterations` hops
-converge in later iterations; geometric chains longer than ~3 nodes
-within tolerance are degenerate input (documented SURVEY.md §7.3).
+op 13 (tolerance snap) is a binned candidate search: nodes go to
+shifted-grid bins at least twice the tolerance wide, pairs inside a
+multi-node bin are refined by planar distance, and the resulting
+merge-candidate edges — a tiny set — are resolved into exact connected
+components by one grouped Arrow call running a numpy union-find, which
+also hands back each canon's coordinate. Within-tolerance chains that
+stretch a component past 8 tolerances are degenerate input
+(SURVEY.md §7.3) and raise instead of snapping far.
 
-Scale notes: the candidate join is an equi-join on int64 cell keys;
-coastal-skew hot cells are handled upstream by adaptive cell
-splitting (operators/skew.py) and AQE skew-join. The snap mapping
+Scale notes: the candidate search is a count-agg over int64 bin keys
+and a broadcast probe of the multi-node bins, which stay small even on
+a dense coast because a bin is ~2 m wide. The snap mapping
 (non-identity labels only) is tiny relative to the node set, so the
 way-side rewrite join broadcasts when small and AQE-shuffles
 otherwise.
@@ -32,16 +32,13 @@ otherwise.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from topo2osm_spark.functions.ids import content_id
 
 QUANT = 7  # decimals — the reference's node-coordinate rounding contract
-
-# snap cell resolution: Web-Mercator cell ground size at res 22 is
-# ~9.6 m × cos(lat) (≥3.1 m at lat 71°N) — safely above any sane merge
-# tolerance (≤1 m), so a 3×3 k-ring always covers the tolerance disk.
-SNAP_RES = 22
 
 
 def quantize(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
@@ -72,28 +69,40 @@ def dedup_nodes(point_df: DataFrame) -> DataFrame:
 
 
 _M_PER_DEG = 111320.0
+_SNAP_SCHEMA = "node_id long, canon_id long, c_lat double, c_lon double"
+# farthest a node may lie from its canon, in merge tolerances
+_MAX_CANON_TOLS = 8.0
 
 
 def snap_mapping(nodes: DataFrame, tol_m: float = 0.5,
-                 iterations: int = 2,
                  max_abs_lat: float | None = None) -> DataFrame:
-    """op 13: (node_id, lat, lon) -> (node_id, canon_id) for nodes that
-    snap to a lower-id node within tol_m. Identity rows are omitted.
+    """op 13: (node_id, lat, lon) -> (node_id, canon_id, c_lat, c_lon)
+    for nodes that snap to a lower-id node within tol_m; c_lat/c_lon
+    are the canon's own coordinate. Identity rows are omitted.
 
-    Shape (ONE data-sized shuffle, pure JVM end-to-end):
+    Shape (one count-agg shuffle over the bin keys, then two shuffles
+    of merge-candidate size):
 
     1. shifted-grid candidate groups: bins of size g = 4*tol in both
        axes at 4 half-cell offsets — the classic guarantee that any
        pair within tol <= g/2 shares at least one bin (JVM floor math,
        4x map-side replication, no Python, no k-ring join);
-    2. i<j pair generation + exact planar distance filter as JVM
+    2. x<y pair generation + exact planar distance filter as JVM
        higher-order functions over the (tiny minority of) multi-node
-       bins -> an edge per merge candidate, distinct across grids;
-    3. connected components by `iterations` rounds of min-label
-       propagation over the symmetric edge set — each round is one
-       edge-count-sized join of the edges with the previous labels and
-       a min per node, so the plan grows linearly with the rounds;
-       fully distributed, no driver union-find.
+       bins -> an edge per merge candidate carrying both ends' ids and
+       coordinates (repeats across the 4 grids are harmless);
+    3. exact connected components in ONE grouped Arrow call over the
+       whole edge set: a numpy union-find (min-label hooking over both
+       edge directions, then pointer jumping, to a fixpoint) whose
+       canon is the component min id. The canon's coordinate comes
+       from the edge rows, so no join back to the node table.
+
+    Loud failure: a within-tolerance chain is degenerate input
+    (components are 2-4 nodes, SURVEY.md §7.3). If any node lies more
+    than 8*tol_m (4 m at the default 0.5 m) from its canon, the call
+    raises ValueError ("... did not converge ...") instead of snapping
+    it that far. A chain of up to 9 nodes (at most 8*tol_m long) always
+    passes, whatever the order of its ids.
 
     g_lon uses cos(max_abs_lat) so the bin guarantee holds at the
     highest latitude in the data. Two ways to establish that bound,
@@ -113,7 +122,9 @@ def snap_mapping(nodes: DataFrame, tol_m: float = 0.5,
 
     Lower latitudes than the bound just get slightly over-wide bins
     (more candidates, same answer). Dense-coast hot bins stay small
-    because g is ~2 m.
+    because g is ~2 m. The edge set is merge-candidate sized, so one
+    group holds it all (the hot-bin broadcast makes the same bet); if
+    it ever outgrows one worker, group by a coarse shifted bin instead.
     """
     import math
     guard = max_abs_lat is not None
@@ -161,101 +172,70 @@ def snap_mapping(nodes: DataFrame, tol_m: float = 0.5,
              .agg(F.collect_list(F.struct("node_id", "lat", "lon")).alias("pts"))
              .select("pts"))
 
-    # all ordered pairs x != y within a bin: nested transform + flatten,
-    # then the planar tolerance test in codegen. Each edge is emitted in
-    # both directions, so the edge set is symmetric without a union,
-    # and distinct() collapses the 4-grid replication.
+    # pairs x < y within a bin: nested transform + flatten, then the
+    # planar tolerance test in codegen. One direction per pair is
+    # enough for a union-find, which also shrugs off the 4-grid repeats.
     pts = F.col("pts")
     pairs = F.flatten(F.transform(
         pts, lambda x: F.transform(
-            F.filter(pts, lambda y: y["node_id"] != x["node_id"]),
+            F.filter(pts, lambda y: y["node_id"] > x["node_id"]),
             lambda y: F.struct(
-                x["node_id"].alias("node_id"),
-                y["node_id"].alias("nbr"),
+                x["node_id"].alias("a"), x["lat"].alias("a_lat"),
+                x["lon"].alias("a_lon"),
+                y["node_id"].alias("b"), y["lat"].alias("b_lat"),
+                y["lon"].alias("b_lon"),
                 ((x["lat"] - y["lat"]) * F.lit(_M_PER_DEG)).alias("dy"),
                 ((x["lon"] - y["lon"]) * F.lit(_M_PER_DEG)
                  * F.cos(F.radians((x["lat"] + y["lat"]) / F.lit(2.0)))).alias("dx")))))
-    edges_bi = (multi
-                .select(F.explode(F.filter(
-                    pairs, lambda p: p["dy"] * p["dy"] + p["dx"] * p["dx"]
-                    <= F.lit(tol_m * tol_m))).alias("e"))
-                .select("e.node_id", "e.nbr")
-                .distinct())
-
-    # connected components by min-label propagation over the edge set
-    # (tiny: one row per actual merge candidate). Labels start as the
-    # min over the node and its neighbours; each round takes the min of
-    # the neighbours' labels, reading the previous labels once. That
-    # min already covers the node's own label: every labelled node has
-    # a neighbour and the edge set is symmetric, so after round r the
-    # neighbours' labels span the node's whole (r+2)-hop ball, own
-    # (r+1)-hop ball included. Components within tolerance are
-    # geometrically tiny (2-4 nodes — SURVEY.md §7.3), so
-    # `iterations`+1 rounds converge; still fully distributed.
-    labels = (edges_bi.groupBy("node_id")
-              .agg(F.least(F.col("node_id"), F.min("nbr")).alias("canon_id")))
-    for _ in range(iterations):
-        labels = (edges_bi.join(
-                      labels.withColumnRenamed("node_id", "nbr"), "nbr")
-                  .groupBy("node_id")
-                  .agg(F.min("canon_id").alias("canon_id")))
-    # Convergence hardening (two label-set-sized joins, no barrier):
-    # 1. one pointer-jumping round: canon := canon(canon) — doubles the
-    #    reachable chain depth, so tolerance chains up to ~6 nodes
-    #    resolve with the default iterations=2;
-    # 2. verification fold: if after compression canon(canon) still
-    #    differs from canon (a within-tolerance chain wider than the
-    #    configured rounds — degenerate input), the inconsistency would
-    #    previously be SILENT (two nodes of one component keeping
-    #    different canons). raise_error folded into the output column
-    #    makes it loud at materialization, like the max_abs_lat guard.
-    l2 = labels.select(F.col("node_id").alias("__n2"),
-                       F.col("canon_id").alias("__c2"))
-    labels = (labels.join(l2, labels["canon_id"] == l2["__n2"], "left")
-              .select("node_id",
-                      F.coalesce("__c2", "canon_id").alias("canon_id")))
-    l3 = labels.select(F.col("node_id").alias("__n3"),
-                       F.col("canon_id").alias("__c3"))
-    labels = (labels.join(l3, labels["canon_id"] == l3["__n3"], "left")
-              .select("node_id",
-                      F.when(F.col("__c3").isNull()
-                             | (F.col("__c3") == F.col("canon_id")),
-                             F.col("canon_id"))
-                       .otherwise(F.raise_error(F.concat(
-                           F.lit("snap_mapping: label propagation did not "
-                                 "converge (within-tolerance node chain "
-                                 "deeper than iterations="),
-                           F.lit(str(iterations)),
-                           F.lit(" rounds + compression); re-run with a "
-                                 "higher `iterations`"))))
-                       .alias("canon_id")))
-    return labels.where(F.col("node_id") != F.col("canon_id"))
+    edges = (multi
+             .select(F.explode(F.filter(
+                 pairs, lambda p: p["dy"] * p["dy"] + p["dx"] * p["dx"]
+                 <= F.lit(tol_m * tol_m))).alias("e"))
+             .select("e.a", "e.a_lat", "e.a_lon", "e.b", "e.b_lat", "e.b_lon"))
+    # a bare lit(0) would be read as a GROUP BY ordinal
+    return edges.groupBy(F.lit(0).alias("g")).applyInPandas(
+        lambda e: _snap_components(e, tol_m), _SNAP_SCHEMA)
 
 
-def with_canon_coords(mapping: DataFrame, nodes: DataFrame,
-                      broadcast_hint: bool = True) -> DataFrame:
-    """Enrich a snap mapping with the CANONICAL node's published
-    coordinate: (node_id, canon_id) -> + (c_lat, c_lon).
-
-    The canon keeps its own quantized coordinate (min-id-wins,
-    snap_nodes_table), so joining the mapping's canon_id against the
-    PRE-snap node table recovers exactly the coordinate the output
-    node table publishes. Run this INSIDE the checkpointed snap_map
-    stage: the node-table scan then happens once, while the stage is
-    materializing anyway — not again on every consumer that needs
-    canon coords (r4 ran it on the points write path, where it forced
-    a full extra scan of the output node table; VERDICT r4 #3).
-
-    broadcast_hint follows the same gate as the other snap-map joins:
-    hint when AQE is off (stats-free leaves would force a sort-merge
-    that shuffles the whole node table); with AQE on pass False and
-    let the runtime pick broadcast from real stage stats."""
-    m = F.broadcast(mapping) if broadcast_hint else mapping
-    return (m.join(nodes.select(F.col("node_id").alias("canon_id"),
-                                F.col("lat").alias("c_lat"),
-                                F.col("lon").alias("c_lon")),
-                   "canon_id")
-            .select("node_id", "canon_id", "c_lat", "c_lon"))
+def _snap_components(edges: pd.DataFrame, tol_m: float) -> pd.DataFrame:
+    """Union-find over one group of (a, a_lat, a_lon, b, b_lat, b_lon)
+    edges -> (node_id, canon_id, c_lat, c_lon) for every non-canon
+    node; the canon is the component's min id."""
+    n_e = len(edges)
+    ids, inv = np.unique(np.concatenate([edges["a"].to_numpy(),
+                                         edges["b"].to_numpy()]),
+                         return_inverse=True)
+    # ids are sorted, so the min index of a component is its min id
+    ia, ib = inv[:n_e], inv[n_e:]
+    lat, lon = np.empty(len(ids)), np.empty(len(ids))
+    lat[inv] = np.concatenate([edges["a_lat"].to_numpy(),
+                               edges["b_lat"].to_numpy()])
+    lon[inv] = np.concatenate([edges["a_lon"].to_numpy(),
+                               edges["b_lon"].to_numpy()])
+    lab = np.arange(len(ids))
+    while True:
+        np.minimum.at(lab, ia, lab[ib])
+        np.minimum.at(lab, ib, lab[ia])
+        while (lab[lab] != lab).any():
+            lab = lab[lab]
+        if (lab[ia] == lab[ib]).all():
+            break
+    moved = np.flatnonzero(lab != np.arange(len(ids)))
+    canon = lab[moved]
+    dy = (lat[moved] - lat[canon]) * _M_PER_DEG
+    dx = ((lon[moved] - lon[canon]) * _M_PER_DEG
+          * np.cos(np.radians((lat[moved] + lat[canon]) / 2.0)))
+    d = np.sqrt(dy * dy + dx * dx)
+    bound = _MAX_CANON_TOLS * tol_m
+    if d.max() > bound:  # every edge moves its larger end, so d is non-empty
+        k = int(d.argmax())
+        raise ValueError(
+            f"snap_mapping: a snap component did not converge within "
+            f"{_MAX_CANON_TOLS:g}*tol_m = {bound:g} m of its canon: node "
+            f"{ids[moved[k]]} lies {d[k]:.2f} m from canon {ids[canon[k]]} "
+            "(a within-tolerance node chain this long is degenerate input)")
+    return pd.DataFrame({"node_id": ids[moved], "canon_id": ids[canon],
+                         "c_lat": lat[canon], "c_lon": lon[canon]})
 
 
 def apply_snap(df: DataFrame, mapping: DataFrame, node_col: str = "node_id",
@@ -263,8 +243,8 @@ def apply_snap(df: DataFrame, mapping: DataFrame, node_col: str = "node_id",
     """Rewrite node ids through the snap mapping (left join + coalesce).
     The mapping (non-identity labels only) is usually tiny -> broadcast;
     pass broadcast_hint=False at scales where it isn't and let AQE pick."""
-    # select first: the enriched mapping (with_canon_coords) carries
-    # c_lat/c_lon, which must not leak into the rewritten frame
+    # select first: the mapping carries the canon's c_lat/c_lon, which
+    # must not leak into the rewritten frame
     m = (mapping.select("node_id", "canon_id")
          .withColumnRenamed("node_id", "__snap_src"))
     if broadcast_hint:

@@ -10,8 +10,8 @@ DataFrame DAG:
     (a FLATE references only its own span's curves, so assembly needs
     no shuffle; see sources/sosi.tokenize_project_assemble_spans)
   S5 way-node explode, quantize, node dedup   — shuffle (hash agg)
-  S6 kNN snap (binned JVM pair-gen + min-label
-     propagation, one labels read per round)  — shuffle
+  S6 kNN snap (binned JVM pair-gen + one
+     grouped-Arrow union-find over the edges) — shuffle
   S7 way re-collect (sorted by pos)           — shuffle
   S8 tag lookup (literal map, element_at)     — no join
   S9 PIP hit set (computed once, read by membership
@@ -127,7 +127,6 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
                  run_pip: bool = True, run_tiles: bool = True,
                  persist_level: str = "DISK_ONLY",
                  input_fp: str | None = None,
-                 max_way_nodes: int = splitops.MAX_WAY_NODES,
                  parse_partitions: int | None = None,
                  snap_max_abs_lat: float = 72.0,
                  cache_docs: bool | None = None) -> dict:
@@ -357,7 +356,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
                                 F.element_at("lons", 1).alias("lon"))
                         .where(F.col("lat").isNotNull()))
         all_points = way_nodes.select("lat", "lon").unionByName(punkt_points)
-        # persisted: 3 consumers (snap max-lat agg, snap_map, nodes_out)
+        # checkpointed: the snap map reads it twice (hot-bin count and
+        # bin probe), the output node table once
         nodes_raw = ck(nodeops.dedup_nodes(all_points), "nodes_raw")
 
         # S6: kNN tolerance snap. The explicit latitude cap (default 72°,
@@ -367,18 +367,15 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         # before the driver can build a single downstream plan — a fixed
         # serial cost that caps N->4N scaling efficiency. Polar callers
         # (Svalbard) pass snap_max_abs_lat explicitly.
-        # the mapping is checkpointed ENRICHED with the canonical node's
-        # published coordinate (c_lat/c_lon): the one nodes_raw scan that
-        # costs runs while this stage materializes anyway, and the points
-        # path below reads the tiny cached map instead of re-scanning the
-        # output node table per write (VERDICT r4 #3 — points stage 3x).
-        # "v2" in the fingerprint: the enriched schema must never resume
-        # from a pre-enrichment checkpoint.
-        snap_map = ck(nodeops.with_canon_coords(
-                          nodeops.snap_mapping(nodes_raw, tol_m=snap_tol_m,
-                                               max_abs_lat=snap_max_abs_lat),
-                          nodes_raw, broadcast_hint=snap_hint),
-                      "snap_map", "v2", snap_tol_m, snap_max_abs_lat)
+        # The mapping carries the canonical node's published coordinate
+        # (c_lat/c_lon) straight out of the union-find, so the points path
+        # below reads the tiny cached map instead of re-scanning the node
+        # table. "v3" in the fingerprint: exact components; a checkpoint
+        # from the old label propagation (which could leave two canons in
+        # one component) must recompute, never resume.
+        snap_map = ck(nodeops.snap_mapping(nodes_raw, tol_m=snap_tol_m,
+                                           max_abs_lat=snap_max_abs_lat),
+                      "snap_map", "v3", snap_tol_m, snap_max_abs_lat)
         nodes_out = ck(nodeops.snap_nodes_table(nodes_raw, snap_map,
                                                 broadcast_hint=snap_hint),
                        "nodes")
@@ -401,7 +398,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
                                      .alias("node_ids")))
 
         # S8: tag lookup on way metadata (+ ele from NØH heights),
-        # then split >max_way_nodes ways into chained parts sharing their
+        # then split >MAX_WAY_NODES ways into chained parts sharing their
         # junction endpoint nodes (OSM 2000-node hard limit)
         way_meta = way_geoms.drop("lats", "lons")
         tagged = tags.with_ele(tags.join_tags(way_meta, spark))
@@ -409,7 +406,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
                          .withColumn("n_nodes", F.size("node_ids")))
         # persisted: 3 consumers (ways output, relation-member expansion
         # via split_mapping, synthesized relations for split rings)
-        ways = ck(splitops.split_long_ways(ways_presplit, max_way_nodes), "ways")
+        ways = ck(splitops.split_long_ways(ways_presplit), "ways")
 
         # relations: multipolygon for every FLATE that has hole rings
         flate_rings = rings.select("doc_id", "span_idx", "flate_id", "objtype",
@@ -467,8 +464,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         # as ways. node_id goes through quantize+snap, so a label
         # sitting on a way vertex resolves to that vertex's canonical node.
         # Published lat/lon are the CANONICAL node's coordinates: the snap
-        # map is enriched with the canon coords (snap-map-sized join
-        # against the persisted node table), so a consumer joining points
+        # map carries the canon coords, so a consumer joining points
         # to nodes on node_id never sees divergent positions. Points whose
         # id did not snap keep their own quantized position, which IS the
         # canonical node's coordinate by construction.
@@ -510,14 +506,12 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
             "echo": echo_spans(docs),
             "integrity": assembly.integrity_report(flates, curves)
                                  .unionByName(kp_missing),
-            # diagnostics surface (scripts/probe_ways_chain.py): named
-            # intermediates for isolated stage timing — lazy, zero cost
-            # unless a caller acts on them
+            # named intermediates for the perfbench layer tracer and
+            # scripts/check_shard_consistency.py — lazy, zero cost unless
+            # a caller acts on them
             "_internal": {
                 "way_nodes": way_nodes,
                 "snap_map": snap_map,
-                "wn_snapped": wn,
-                "way_node_lists": way_node_lists,
                 "tagged_ways_presplit": ways_presplit,
                 "curves": curves,
             },
