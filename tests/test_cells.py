@@ -79,8 +79,3 @@ def test_covering_cells():
     with pytest.raises(ValueError):
         cells.covering_cells(0, 80, -170, 170, 20)
 
-
-def test_res_for_bbox():
-    r = cells.res_for_bbox(59.0, 59.01, 10.0, 10.01, target_cells=16)
-    cov = cells.covering_cells(59.0, 59.01, 10.0, 10.01, r)
-    assert len(cov) <= 16

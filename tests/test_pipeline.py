@@ -402,26 +402,28 @@ def _plan_nodes(node, out, in_cache=False):
 
 
 def test_pip_runs_once(pipeline_out):
-    """membership and islands read ONE cached PIP hit set: both
-    executed plans scan the same cached relation, the PIP refine
-    (mapInPandas) lives inside it, and neither plan runs a Python map
-    of its own outside it."""
-    builders = []
+    """membership and islands read ONE materialized PIP hit set: both
+    executed plans scan the same checkpoint of it (the RDD that holds
+    pt_uid with the ring metadata), and neither plan runs a Python map
+    of its own: the refine ran once, inside that checkpoint."""
+    hit_rdds = []
     for name in ("membership", "islands"):
         nodes = []
         _plan_nodes(pipeline_out[name]._jdf.queryExecution().executedPlan(),
                     nodes)
-        scans = [n for cls, inside, n in nodes
-                 if cls == "InMemoryTableScanExec" and not inside]
-        assert scans, f"{name} does not read the cached hit set"
-        py_maps = [inside for cls, inside, _ in nodes if "MapIn" in cls]
-        assert any(py_maps), \
-            f"{name}: PIP refine not inside the cached relation"
-        assert all(py_maps), \
-            f"{name} re-runs a Python map outside the cached hit set"
-        builders.append({s.relation().cacheBuilder() for s in scans})
-    assert builders[0] & builders[1], \
-        "membership and islands read different cached relations"
+        assert not [cls for cls, _, _ in nodes if "MapIn" in cls], \
+            f"{name} re-runs a Python map outside the hit set"
+        rdds = set()
+        for cls, _, node in nodes:
+            if cls == "RDDScanExec":
+                out = node.output()
+                cols = {out.apply(i).name() for i in range(out.size())}
+                if {"pt_uid", "ring_uid", "is_hole"} <= cols:
+                    rdds.add(node.rdd().id())
+        assert rdds, f"{name} does not read the checkpointed hit set"
+        hit_rdds.append(rdds)
+    assert hit_rdds[0] & hit_rdds[1], \
+        "membership and islands read different hit sets"
 
 
 def _jobs(spark) -> list[dict]:

@@ -76,46 +76,3 @@ def test_adaptive_cell_split(spark):
                  __import__("numpy").unique(
                      cells.parent(__import__("numpy").array(sorted(hot_out)), 8))}
     assert recovered == {hot_cell}          # children of the hot cell
-
-
-def test_pip_ladder_trim_reduces_candidates(spark):
-    """The trimmed point ladder must (a) keep results identical to the
-    untrimmed join and (b) cut the candidate fan-out to the distinct
-    cover resolutions actually present (VERDICT r4 #5)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from topo2osm_spark.operators.pip import (
-        PIP_RES, pip_join, point_cell_ladder, ring_cover_cells)
-
-    ring_lat = [59.9, 59.9, 60.1, 60.1, 59.9]
-    ring_lon = [9.9, 10.1, 10.1, 9.9, 9.9]
-    rng = np.random.default_rng(11)
-    plat = 59.85 + rng.random(500) * 0.3
-    plon = 9.85 + rng.random(500) * 0.3
-    pts = spark.createDataFrame(
-        [(int(i), float(a), float(o))
-         for i, (a, o) in enumerate(zip(plat, plon))],
-        "pt_uid long, lat double, lon double")
-    rings = spark.createDataFrame(
-        [(1, ring_lat, ring_lon)],
-        "ring_uid long, lats array<double>, lons array<double>")
-
-    trimmed = {(r["pt_uid"], r["ring_uid"]) for r in
-               pip_join(pts, rings, ["pt_uid"], ["ring_uid"]).collect()}
-    full = {(r["pt_uid"], r["ring_uid"]) for r in
-            pip_join(pts, rings, ["pt_uid"], ["ring_uid"],
-                     trim_ladder=False).collect()}
-    assert trimmed == full and trimmed
-
-    # fan-out probe: this small ring covers at few resolutions, so the
-    # trimmed ladder shuffles far fewer candidate rows than the full
-    # PIP_RES+1 ladder
-    cover = ring_cover_cells(rings, ["ring_uid"])
-    n_res = (cover.select(F.shiftrightunsigned("cell", 58).alias("r"))
-             .distinct().count())
-    assert 1 <= n_res <= 3
-    ladder_rows = pts.select(
-        F.explode(point_cell_ladder("lat", "lon"))).count()
-    assert ladder_rows == 500 * (PIP_RES + 1)
-    trimmed_rows = ladder_rows * n_res // (PIP_RES + 1)
-    assert trimmed_rows <= ladder_rows // 4

@@ -166,8 +166,9 @@ def cell_bounds(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, n
 
 def covering_cells(lat_min: float, lat_max: float, lon_min: float,
                    lon_max: float, res: int, cap: int = 4096) -> np.ndarray:
-    """All cells at `res` intersecting the bbox (scalar helper for ring
-    covers). Count is capped; caller coarsens res when over cap."""
+    """All cells at `res` intersecting the bbox (scalar oracle of the
+    JVM ring cover, operators/pip.ring_cover_cells). Raises ValueError
+    when the count exceeds `cap`."""
     x0, y1 = lonlat_to_norm(np.array([lon_min]), np.array([lat_min]))
     x1, y0 = lonlat_to_norm(np.array([lon_max]), np.array([lat_max]))
     nf = float(2**res)
@@ -183,15 +184,3 @@ def covering_cells(lat_min: float, lat_max: float, lon_min: float,
                          np.arange(iy0, iy1 + 1, dtype=np.uint64))
     return from_xy(gx.ravel(), gy.ravel(), res)
 
-
-def res_for_bbox(lat_min: float, lat_max: float, lon_min: float,
-                 lon_max: float, target_cells: int = 16,
-                 max_res: int = MAX_RES) -> int:
-    """Finest resolution at which the bbox spans <= target_cells cells."""
-    x0, y1 = lonlat_to_norm(np.array([lon_min]), np.array([lat_min]))
-    x1, y0 = lonlat_to_norm(np.array([lon_max]), np.array([lat_max]))
-    span = max(float(x1[0] - x0[0]), float(y1[0] - y0[0]), 1e-15)
-    # at res r the bbox spans ~ (span * 2^r + 1)^2 cells
-    import math
-    r = int(math.floor(math.log2(max(math.sqrt(target_cells) - 1, 1) / span)))
-    return max(0, min(r, max_res))

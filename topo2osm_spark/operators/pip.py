@@ -12,85 +12,93 @@ ring metadata); both FLATE interior-point -> assembled-ring membership
 (attribute assignment) and the island-in-water containment hierarchy
 (multipolygon roles) read that one set.
 
-Scale notes: ring cover cells are generated at an adaptive per-ring
-resolution (bounded cell count per ring, so a fjord-length coastline
-ring cannot fan out into millions of join keys); the join key is a
-64-bit int; hot-cell skew is handled by AQE skew join + optional
-salting (operators/skew.py).
+Candidate generation is JVM Column expressions on the tiles.py codec;
+the refine is the only Python boundary. Each ring is covered at its own
+resolution: the finest in the literal range COVER_RES (z10-z21) at
+which its bbox spans at most COVER_SIDE cells per side. A small ring's
+cover is then close to its bbox, so its candidates are the points in
+or near it rather than every point sharing one coarse cell, and a
+fjord-length coastline ring cannot fan out into millions of join keys
+(only rings wider than COVER_SIDE cells at the range floor exceed
+COVER_SIDE^2 cells). A point's cells over the
+same range are shifts of its one finest-resolution cell id, so it meets
+a ring's cover at whichever resolution the ring chose. The join key is
+a 64-bit int; hot-cell skew is handled by AQE skew join + the salted
+refine (operators/skew.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from topo2osm_spark.functions import cells, geom
+from topo2osm_spark.functions import geom
+from topo2osm_spark.operators import tiles
 
-PIP_RES = 13  # join resolution: ~4.9 km cells at equator
-_MAX_COVER = 64  # per-ring cover cell budget at PIP_RES (coarsens if over)
+COVER_RES = range(10, 22)  # resolutions of ring covers and point ladders
+COVER_SIDE = 8  # max cover cells per bbox side (above the range floor)
+_FINE = COVER_RES[-1]
 
 
-def ring_cover_cells(rings: DataFrame, ring_key_cols: list[str],
-                     res: int = PIP_RES) -> DataFrame:
+def ring_cover_cells(rings: DataFrame, ring_key_cols: list[str]) -> DataFrame:
     """rings(lats, lons, <keys>) -> (cell, <keys>) cover rows.
 
-    mapInArrow: per ring, all cells at `res` intersecting the ring
-    bbox. If the bbox exceeds the per-ring cell budget the cover
-    coarsens (cells at res-1, res-2, …); the point side joins on its
-    full resolution LADDER (point_cell_ladder), so coarse covers still
-    match. Bounded fan-out per ring by construction."""
-    from pyspark.sql.pandas.types import to_arrow_type
-    key_fields = [rings.schema[k] for k in ring_key_cols]
-    out_fields = [pa.field("cell", pa.int64())] + [
-        pa.field(f.name, to_arrow_type(f.dataType)) for f in key_fields]
+    Per ring, every cell intersecting its bbox at the finest resolution
+    r in COVER_RES where the bbox spans at most COVER_SIDE cells per
+    side (cells.covering_cells(bbox, r)); the floor of COVER_RES if
+    none does. The bbox corners are indexed once at the finest
+    resolution; a coarser index is a right shift. A ring with no
+    coordinates has no cover."""
+    x0, y0 = tiles.cell_index_expr(F.array_max("lats"), F.array_min("lons"),
+                                   _FINE)
+    x1, y1 = tiles.cell_index_expr(F.array_min("lats"), F.array_max("lons"),
+                                   _FINE)
+    b = rings.where(F.size("lats") > 0).select(
+        *ring_key_cols, x0.alias("__x0"), x1.alias("__x1"),
+        y0.alias("__y0"), y1.alias("__y1"))
 
-    def gen(batches):
-        for b in batches:
-            lats = b.column("lats").to_pylist()
-            lons = b.column("lons").to_pylist()
-            keys = {k: b.column(k).to_pylist() for k in ring_key_cols}
-            rows = {"cell": []}
-            for k in ring_key_cols:
-                rows[k] = []
-            for i in range(b.num_rows):
-                la = np.asarray(lats[i]); lo = np.asarray(lons[i])
-                if la.size == 0:
-                    continue
-                r = res
-                while r > 0:
-                    try:
-                        cov = cells.covering_cells(
-                            float(la.min()), float(la.max()),
-                            float(lo.min()), float(lo.max()), r,
-                            cap=_MAX_COVER)
-                        break
-                    except ValueError:
-                        r -= 1
-                else:
-                    cov = np.array([], dtype=np.int64)
-                # normalize to PIP_RES-aligned join keys: if coarsened,
-                # emit the coarse cells; pip_join joins points at the
-                # same ladder of resolutions.
-                rows["cell"].extend(cov.tolist())
-                for k in ring_key_cols:
-                    rows[k].extend([keys[k][i]] * len(cov))
-            yield pa.RecordBatch.from_pydict(rows, schema=pa.schema(out_fields))
+    def fits(r: int) -> Column:
+        k = _FINE - r
+        return ((F.shiftright("__x1", k) - F.shiftright("__x0", k)
+                 < COVER_SIDE)
+                & (F.shiftright("__y1", k) - F.shiftright("__y0", k)
+                   < COVER_SIDE))
+    res = F.coalesce(*[F.when(fits(r), F.lit(r)) for r in COVER_RES[::-1]],
+                     F.lit(COVER_RES[0]))
+    b = b.withColumn("__res", res)
 
-    cols = ["lats", "lons", *ring_key_cols]
-    return rings.select(*cols).mapInArrow(gen, T.StructType(
-        [T.StructField("cell", T.LongType())] + key_fields))
+    def at_res(c: str) -> Column:
+        return F.call_function("shiftright", F.col(c),
+                               F.lit(_FINE) - F.col("__res"))
+    cov = b.select(*ring_key_cols, "__res",
+                   F.explode(F.sequence(at_res("__x0"), at_res("__x1")))
+                   .alias("__x"),
+                   at_res("__y0").alias("__y0"), at_res("__y1").alias("__y1"))
+    cov = cov.select(*ring_key_cols, "__res", "__x",
+                     F.explode(F.sequence("__y0", "__y1")).alias("__y"))
+    return cov.select(tiles.tile_cell_expr(F.col("__res"), F.col("__x"),
+                                           F.col("__y")).alias("cell"),
+                      *ring_key_cols)
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def point_cell_ladder(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    """Point side: cell ids at PIP_RES and every coarser resolution down
-    to 0 — so a point matches ring covers at whatever resolution the
-    ring coarsened to. 14 extra int64s per point, all map-side."""
-    la = lat.to_numpy(); lo = lon.to_numpy()
-    ladder = np.stack([cells.encode(la, lo, r) for r in range(PIP_RES + 1)], axis=1)
-    return pd.Series(list(ladder))
+def _ladder(cell: Column) -> Column:
+    """A finest-resolution cell id -> its ancestors at every resolution
+    of COVER_RES (array<long>)."""
+    return F.array(*[tiles.parent_cell_expr(cell, F.lit(r))
+                     for r in COVER_RES])
+
+
+def point_cell_ladder(lat: str | Column, lon: str | Column) -> Column:
+    """Point side: the point's cell at every resolution of COVER_RES
+    (array<long>), so it matches a ring cover at whatever resolution
+    the ring chose. The cell id is computed once, at the finest
+    resolution, and bound by a one-element transform: inlining it into
+    each ladder entry would copy its asinh/tan index tree 12 times into
+    the expression (each Morton spread step already references its
+    input twice)."""
+    return F.flatten(F.transform(
+        F.array(tiles.cell_at_res_expr(lat, lon, _FINE)), _ladder))
 
 
 REFINE_SALT = 16  # candidate chunks per ring (bounds the refine row size)
@@ -98,8 +106,7 @@ REFINE_SALT = 16  # candidate chunks per ring (bounds the refine row size)
 
 def pip_join(points: DataFrame, rings: DataFrame,
              point_key_cols: list[str], ring_key_cols: list[str],
-             refine_salt: int = REFINE_SALT,
-             trim_ladder: bool = True) -> DataFrame:
+             refine_salt: int = REFINE_SALT) -> DataFrame:
     """Candidate generation (cell equi-join) + exact ray-cast refine.
 
     points: (<point_keys>, lat, lon); rings: (<ring_keys>, lats, lons).
@@ -107,36 +114,30 @@ def pip_join(points: DataFrame, rings: DataFrame,
 
     The refine key is SALTED: a hot ring (sea polygon / fjord coastline
     matching millions of candidate points) would otherwise concentrate
-    its whole candidate set into one collect_list row -> one straggler
+    its whole candidate set into one collect_set row -> one straggler
     task / OOM. pmod(xxhash64(point keys), refine_salt) splits a ring's
     candidates into bounded chunks; the ray-cast is per-point
     independent, so chunk results union cleanly. Cost: ring coords
     replicate per non-empty chunk (<= refine_salt copies).
 
-    trim_ladder (VERDICT r4 #5): the point ladder explodes PIP_RES+1
-    rows per point, but ring covers occupy only the few resolutions
-    coarsening actually produced (usually just PIP_RES) — a cell id
-    embeds its resolution in bits 58..62, so a left-semi against the
-    broadcast distinct-resolution set of the covers drops the
-    never-matching ladder rows map-side, BEFORE the candidate shuffle.
-    At membership scale the point side dominates, so cutting its
-    shuffle fan-out several-fold is worth the one extra evaluation of
-    the (ring-sized, far smaller) cover subtree that the res-set
-    derivation costs.
+    Candidates: each point explodes to its len(COVER_RES) ladder cells,
+    each ring to its cover (ring_cover_cells), and the two meet on the
+    cell id. A (point, ring) pair meets in at most one cell, the ring's
+    resolution; collect_set drops the repeats that duplicate input rows
+    would make, without a shuffle of its own. Everything before the
+    refine is JVM expressions: no Python worker, and no broadcast (the
+    merge hint keeps the planner from broadcasting a side it estimates
+    small), so a lazy checkpoint of the hit set never waits for a
+    broadcast job on its caller's thread. The point's finest cell id is
+    its own column, so the ladder reads one attribute instead of
+    inlining the codec 12 times (which overflowed whole-stage codegen).
     """
     cover = ring_cover_cells(rings, ring_key_cols)
-    pts = (points
-           .withColumn("cell", F.explode(point_cell_ladder("lat", "lon")))
-           .select(*point_key_cols, "lat", "lon", "cell"))
-    if trim_ladder:
-        cover_res = (cover.select(
-            F.shiftrightunsigned("cell", 58).alias("__res")).distinct())
-        pts = pts.join(
-            F.broadcast(cover_res),
-            F.shiftrightunsigned(F.col("cell"), 58) == F.col("__res"),
-            "left_semi")
-    cand = (pts.join(cover, "cell").drop("cell")
-            .dropDuplicates([*point_key_cols, *ring_key_cols])
+    pts = (points.select(*point_key_cols, "lat", "lon")
+           .withColumn("__c", tiles.cell_at_res_expr("lat", "lon", _FINE))
+           .withColumn("cell", F.explode(_ladder(F.col("__c"))))
+           .drop("__c"))
+    cand = (pts.join(cover.hint("merge"), "cell").drop("cell")
             .withColumn("chunk", F.pmod(
                 F.xxhash64(*point_key_cols), F.lit(max(1, refine_salt)))))
     # refine: one hash-agg row per (ring, chunk), join ring coords, then
@@ -144,7 +145,7 @@ def pip_join(points: DataFrame, rings: DataFrame,
     # (same pattern as snap/assembly)
     ring_geo = rings.select(*ring_key_cols, "lats", "lons")
     grouped = (cand.groupBy(*ring_key_cols, "chunk")
-               .agg(F.collect_list(F.struct(*point_key_cols, "lat", "lon"))
+               .agg(F.collect_set(F.struct(*point_key_cols, "lat", "lon"))
                      .alias("cand_pts"))
                .join(ring_geo, ring_key_cols))
 

@@ -82,9 +82,12 @@ def tile_cell_expr(z: str | Column, x: str | Column,
     return _cell(_c(z), _c(x).cast("long"), _c(y).cast("long"))
 
 
-def cell_at_res_expr(lat: str | Column, lon: str | Column,
-                     res: int) -> Column:
-    """(lat, lon) -> cell id at LITERAL resolution res (cells.encode)."""
+def cell_index_expr(lat: str | Column, lon: str | Column,
+                    res: int) -> tuple[Column, Column]:
+    """(lat, lon) -> long grid indices (ix, iy) at LITERAL resolution
+    res, clamped to [0, 2^res) (the indices cells.encode interleaves).
+    Scaling by 2^res is exact, so the index at a coarser resolution r
+    is this one shifted right by res - r."""
     n = 1 << res
     lat_c = F.greatest(F.least(_c(lat), F.lit(cells.MAX_LAT)),
                        F.lit(-cells.MAX_LAT))
@@ -95,7 +98,13 @@ def cell_at_res_expr(lat: str | Column, lon: str | Column,
     def index(v: Column) -> Column:
         return F.least(F.greatest(F.floor(v * F.lit(float(n))), F.lit(0)),
                        F.lit(n - 1))
-    return _cell(F.lit(res), index(xn), index(yn))
+    return index(xn), index(yn)
+
+
+def cell_at_res_expr(lat: str | Column, lon: str | Column,
+                     res: int) -> Column:
+    """(lat, lon) -> cell id at LITERAL resolution res (cells.encode)."""
+    return _cell(F.lit(res), *cell_index_expr(lat, lon, res))
 
 
 def parent_cell_expr(cell: str | Column, z: str | Column) -> Column:

@@ -14,8 +14,11 @@ DataFrame DAG:
      grouped-Arrow union-find over the edges) — shuffle
   S7 way re-collect (sorted by pos)           — shuffle
   S8 tag lookup (literal map, element_at)     — no join
-  S9 PIP hit set (computed once, read by membership
-     AND islands) + raster<->vector tile join — cell equi-joins
+  S9 PIP hit set (JVM per-ring-resolution covers
+     and point cell ladders, one salted ray-cast
+     Py boundary; computed once, read by
+     membership AND islands) + raster<->vector
+     tile join                                — cell equi-joins
   S10 outputs: nodes/ways/relations/tile_assignments/echo/metrics
 
 Every output id is content-addressed (63-bit xxhash64 of stable
@@ -59,10 +62,6 @@ class _Prefetcher:
     consumed sequentially; concurrent downstream actions on a stage
     being materialized just block on the BlockManager's per-partition
     locks rather than recomputing.
-
-    Persisted DataFrames are submitted the same way (the PIP hit set;
-    ck() in run_pipeline says why it is not checkpointed): count()
-    fills their cache just as it fills a checkpoint's blocks.
     """
 
     def __init__(self) -> None:
@@ -218,10 +217,6 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         # its plan is computed (measured in isolation, local mode, AQE
         # off, 4 vCPUs: a broadcast join of a 3-s mapInPandas side
         # blocked 6.3 s, the same join without a broadcast 0.17 s).
-        # Stages with an expensive broadcast side therefore persist
-        # instead (the PIP hit set below: its trim_ladder broadcast
-        # costs ~2.4 s on the main thread, and a ck() prototype gained
-        # about half what persist + prefetch did).
         df = df.localCheckpoint(eager=False, storageLevel=level)
         pf.submit(df, name)
         return df
@@ -541,20 +536,14 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
                 F.col("flate_id").alias("ring_flate_id"),
                 F.col("objtype").alias("ring_objtype"), "is_hole", "area")
             # ONE hit set, two consumers: membership and islands both read
-            # this materialized (hit ⋈ ring_meta) set, so the ring cover
-            # (join + trim_ladder broadcast), point ladder, candidate join
-            # and refine run once per conversion instead of once per write.
-            # In memory it is persisted, not ck()'d (lazy localCheckpoint
-            # blocks on the trim_ladder broadcast, see ck()): the prefetch
-            # thread runs the whole PIP plan on idle executors while the
-            # caller writes the earlier outputs.
-            hitm = hits.join(ring_meta, "ring_uid")
-            if warehouse is not None:
-                hitm = ck(hitm, "pip_hits")
-            else:
-                sc.setJobDescription("topo2osm:pip_hits")
-                hitm = hitm.persist(level)
-                pf.submit(hitm, "pip_hits")
+            # this checkpointed (hit ⋈ ring_meta) set, so the ring cover,
+            # point ladder, candidate join and refine run once per
+            # conversion instead of once per write. Candidate generation
+            # is JVM expressions with no broadcast side, so the lazy
+            # checkpoint waits for no job on this thread (see ck()); in
+            # memory the prefetch thread runs the whole PIP plan on idle
+            # executors while the caller writes the earlier outputs.
+            hitm = ck(hits.join(ring_meta, "ring_uid"), "pip_hits")
             pt_meta = pts.select("pt_uid", "pt_doc", "pt_flate").join(
                 flates.select(F.col("doc_id").alias("pt_doc"),
                               F.col("obj_id").alias("pt_flate"),

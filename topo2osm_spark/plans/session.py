@@ -41,6 +41,10 @@ def build_session(app: str = "topo2osm_spark", master: str | None = None,
          # cancelled stage tears down its Arrow workers.
          .config("spark.sql.broadcastTimeout", "3600")
          .config("spark.sql.session.timeZone", "UTC")
+         # one conversion generates ~300 distinct classes; at the
+         # default 100 entries the codegen cache thrashes and a second
+         # conversion in the same JVM compiles them all again
+         .config("spark.sql.codegen.cache.maxEntries", "2000")
          .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
          .config("spark.ui.enabled", "false"))
     spark = b.getOrCreate()
