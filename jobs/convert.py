@@ -125,6 +125,9 @@ def main() -> int:
     from concurrent.futures import ThreadPoolExecutor
 
     def write_one(name: str) -> tuple[str, float]:
+        # local properties are per thread: name this write's jobs (its
+        # broadcast jobs inherit the description)
+        spark.sparkContext.setJobDescription(f"topo2osm:write:{name}")
         t = time.monotonic()
         out[name].write.mode("overwrite").parquet(
             os.path.join(args.out, "out_" + name))
@@ -133,19 +136,12 @@ def main() -> int:
     # write-job concurrency: enough overlap to hide per-job scheduler
     # latency, low enough to stay under the host's IPC-concurrency
     # collapse threshold (~8-12 active Arrow runner contexts).
-    # Waves respect the persist DAG: relations reads the ways persist
-    # (split mapping), so it must not start until the ways write has
-    # materialized that cache — otherwise both jobs recompute the
-    # split chain concurrently.
     wc = int(os.environ.get("SPARK_GRAFT_WRITE_CONCURRENCY", "2"))
-    waves = (("nodes", "ways"),
-             ("relations", "tile_assignments", "echo", "points",
-              "membership", "islands"))
-    for wave in waves:
-        with ThreadPoolExecutor(max_workers=max(1, wc)) as ex:
-            for name, secs in ex.map(write_one, wave):
-                stage_secs[name] = secs
-    names = waves[0] + waves[1]
+    names = ("nodes", "ways", "relations", "tile_assignments", "echo",
+             "points", "membership", "islands")
+    with ThreadPoolExecutor(max_workers=max(1, wc)) as ex:
+        for name, secs in ex.map(write_one, names):
+            stage_secs[name] = secs
     if args.xml:
         from topo2osm_spark.sources import osm_xml
         tx = time.monotonic()

@@ -426,6 +426,18 @@ def test_pip_runs_once(pipeline_out):
         "membership and islands read different hit sets"
 
 
+def test_relations_plan_is_one_grouping(pipeline_out):
+    """relations are one grouping of the ways checkpoint: the executed
+    plan holds no broadcast exchange and no Python or Arrow node."""
+    nodes = []
+    _plan_nodes(pipeline_out["relations"]._jdf.queryExecution().executedPlan(),
+                nodes)
+    bad = [cls for cls, _, _ in nodes
+           if "BroadcastExchange" in cls
+           or any(k in cls for k in ("Python", "Arrow", "Pandas"))]
+    assert not bad, f"relations plan holds {bad}"
+
+
 def _jobs(spark) -> list[dict]:
     """Every job in Spark's status store (the store behind its UI), as
     JSON: id, description, submission time in epoch ms."""

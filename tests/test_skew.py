@@ -1,6 +1,5 @@
-"""Salting + adaptive cell splitting (SURVEY.md §2 ops 41, 42)."""
+"""Salting (SURVEY.md §2 op 41) and the salted PIP refine."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from topo2osm_spark.operators import skew
@@ -13,18 +12,6 @@ def test_add_salt_deterministic(spark):
     assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))
     salts = {r["salt"] for r in s1}
     assert salts == set(range(8))  # hot key spread over all buckets
-
-
-def test_salted_join_equals_plain_join(spark):
-    """Salted equi-join (probe salted, build exploded) must produce the
-    same rows as the plain join."""
-    big = spark.range(500).withColumn("k", (F.col("id") % 3).cast("long"))
-    dim = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k long, v string")
-    plain = {(r["id"], r["v"]) for r in big.join(dim, "k").collect()}
-    sb = skew.add_salt(big, ["id"], buckets=4)
-    sd = skew.explode_salt(dim, buckets=4)
-    salted = {(r["id"], r["v"]) for r in sb.join(sd, ["k", "salt"]).collect()}
-    assert salted == plain
 
 
 def test_pip_refine_salting_hot_ring(spark):
@@ -55,24 +42,3 @@ def test_pip_refine_salting_hot_ring(spark):
         plat, plon, np.array(ring_lat), np.array(ring_lon)))[0].tolist())
     assert got == expect
     assert len(expect) > 5000  # the hot ring really was hot
-
-
-def test_adaptive_cell_split(spark):
-    """Hot cells re-encode at finer resolution; cold cells keep theirs."""
-    import numpy as np
-    from topo2osm_spark.functions import cells
-    hot_cell = int(cells.encode(np.array([60.0]), np.array([10.0]), 8)[0])
-    cold_cell = int(cells.encode(np.array([65.0]), np.array([20.0]), 8)[0])
-    rows = [(60.0 + i * 1e-4, 10.0 + i * 1e-4, hot_cell) for i in range(300)]
-    rows += [(65.0, 20.0, cold_cell) for _ in range(5)]
-    df = spark.createDataFrame(rows, "lat double, lon double, cell long")
-    out = skew.adaptive_cell_split(df, threshold=100, extra_res=3).collect()
-    hot_out = {r["cell"] for r in out if r["lat"] < 64}
-    cold_out = {r["cell"] for r in out if r["lat"] > 64}
-    assert cold_out == {cold_cell}
-    assert hot_cell not in hot_out          # re-encoded
-    assert len(hot_out) > 1                 # actually split
-    recovered = {int(c) for c in
-                 __import__("numpy").unique(
-                     cells.parent(__import__("numpy").array(sorted(hot_out)), 8))}
-    assert recovered == {hot_cell}          # children of the hot cell

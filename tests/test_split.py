@@ -54,53 +54,126 @@ def test_split_exact_boundary(spark):
     assert out2[0]["node_ids"][-1] == out2[1]["node_ids"][0]
 
 
+_WAYS = ("way_id long, doc_id string, span_idx int, geom_kind string, "
+         "flate_id long, ring_idx int, is_hole boolean, closed boolean, "
+         "emit boolean, tags map<string,string>, node_ids array<long>")
+
+
+def _relations(spark, rows):
+    """relations_from_ways over split_long_ways of `rows` (_WAYS
+    columns, n_nodes given in place of node_ids); returns (relations,
+    {parent_way_id: [part way_id in chain order]})."""
+    from topo2osm_spark.operators.split import (relations_from_ways,
+                                                split_long_ways)
+    ways = split_long_ways(spark.createDataFrame(
+        [r[:-1] + (list(range(r[-1])),) for r in rows], _WAYS), 2000)
+    parts = {}
+    for w in sorted(ways.select("parent_way_id", "part", "way_id").collect()):
+        parts.setdefault(w["parent_way_id"], []).append(w["way_id"])
+    return relations_from_ways(ways).collect(), parts
+
+
+def _content_id(spark, schema, *values):
+    """content_id of `values` typed by `schema`, as the pipeline types
+    them (span_idx int, flate_id and way ids long)."""
+    from topo2osm_spark.functions.ids import content_id
+    df = spark.createDataFrame([values], schema)
+    return df.select(content_id(*df.columns)).first()[0]
+
+
+def _holed_id(spark, doc_id, span_idx, flate_id):
+    return _content_id(spark, "d string, s int, k string, f long",
+                       doc_id, span_idx, "R", flate_id)
+
+
+def _split_ring_id(spark, parent_way_id):
+    return _content_id(spark, "p long, k string", parent_way_id, "SR")
+
+
 def test_relation_member_expansion(spark):
-    from topo2osm_spark.operators.split import (
-        expand_relation_members, split_long_ways, split_mapping)
-    ways = split_long_ways(_ways_df(spark, [range(4503), range(10)]), 2000)
-    mapping = split_mapping(ways)
-    rels = spark.createDataFrame(
-        [(7, "d1", 0, 5,
-          [{"role": "outer", "way_id": 1}, {"role": "inner", "way_id": 2}],
-          {"natural": "water"}, "multipolygon")],
-        "rel_id long, doc_id string, span_idx int, flate_id long, "
-        "members array<struct<role:string,way_id:long>>, "
-        "tags map<string,string>, rel_type string")
-    out = expand_relation_members(rels, mapping).collect()
-    assert len(out) == 1
-    members = out[0]["members"]
+    """A split outer ring of a holed FLATE expands in place, in chain
+    order; the unsplit hole passes through."""
+    water = {"natural": "water"}
+    rels, parts = _relations(spark, [
+        (1, "d1", 0, "FLATE", 5, 0, False, True, True, water, 4503),
+        (2, "d1", 0, "FLATE", 5, 1, True, True, True, water, 10)])
+    assert len(rels) == 1
+    members = rels[0]["members"]
     # way 1 (split into 3) expands in place; way 2 passes through
     assert len(members) == 4
     assert [m["role"] for m in members] == ["outer"] * 3 + ["inner"]
     assert members[3]["way_id"] == 2
-    split_ids = {r["way_id"] for r in mapping.collect()}
-    assert {m["way_id"] for m in members[:3]} == split_ids
-    assert out[0]["tags"]["natural"] == "water"
+    assert [m["way_id"] for m in members[:3]] == parts[1]
+    assert rels[0]["tags"]["natural"] == "water"
+    assert rels[0]["rel_id"] == _holed_id(spark, "d1", 0, 5)
 
 
 def test_synthesized_relation_for_split_closed_ring(spark):
-    from topo2osm_spark.operators.split import (
-        split_long_ways, synthesize_relations_for_split_rings)
-    ways = spark.createDataFrame(
-        [(1, "d1", 0, 5, list(range(4503)), True, True, {"natural": "water"}),
-         (2, "d1", 0, 6, list(range(30)), True, True, {"natural": "wood"})],
-        "way_id long, doc_id string, span_idx int, flate_id long, "
-        "node_ids array<long>, closed boolean, emit boolean, "
-        "tags map<string,string>")
-    split = split_long_ways(ways, 2000)
-    empty_rels = spark.createDataFrame(
-        [],
-        "rel_id long, doc_id string, span_idx int, flate_id long, "
-        "members array<struct<role:string,way_id:long>>, "
-        "tags map<string,string>, rel_type string")
-    out = synthesize_relations_for_split_rings(split, empty_rels).collect()
+    rels, parts = _relations(spark, [
+        (1, "d1", 0, "FLATE", 5, 0, False, True, True,
+         {"natural": "water"}, 4503),
+        (2, "d1", 0, "FLATE", 6, 0, False, True, True,
+         {"natural": "wood"}, 30)])
     # only the SPLIT closed ring gets a relation; the short one doesn't
-    assert len(out) == 1
-    r = out[0]
+    assert len(rels) == 1
+    r = rels[0]
     assert r["rel_type"] == "multipolygon"
     assert [m["role"] for m in r["members"]] == ["outer"] * 3
+    assert [m["way_id"] for m in r["members"]] == parts[1]
     assert r["tags"]["natural"] == "water"
     assert r["rel_id"] >= 0
+    assert r["rel_id"] == _split_ring_id(spark, 1)
+    assert (r["doc_id"], r["span_idx"], r["flate_id"]) == ("d1", 0, 5)
+
+
+def test_split_hole_ring_expands_in_place(spark):
+    """A split HOLE ring of a holed FLATE becomes inner parts of the
+    FLATE's own multipolygon and gets no split-ring relation."""
+    wood = {"natural": "wood"}
+    rels, parts = _relations(spark, [
+        (1, "d1", 0, "FLATE", 5, 0, False, True, True, wood, 10),
+        (2, "d1", 0, "FLATE", 5, 1, True, True, True, wood, 4503)])
+    assert len(rels) == 1
+    assert rels[0]["rel_id"] == _holed_id(spark, "d1", 0, 5)
+    assert [(m["role"], m["way_id"]) for m in rels[0]["members"]] == \
+        [("outer", 1)] + [("inner", w) for w in parts[2]]
+
+
+def test_split_closed_coastline_gets_relation(spark):
+    """A closed split Kystkontur curve way (flate_id is its obj_id)
+    gets a split-ring multipolygon with the way's tags."""
+    coast = {"natural": "coastline"}
+    rels, parts = _relations(spark, [
+        (1, "d1", 0, "KURVE", 9, 0, False, True, True, coast, 4503)])
+    assert len(rels) == 1
+    assert rels[0]["rel_id"] == _split_ring_id(spark, 1)
+    assert [(m["role"], m["way_id"]) for m in rels[0]["members"]] == \
+        [("outer", w) for w in parts[1]]
+    assert dict(rels[0]["tags"]) == coast
+
+
+def test_split_open_or_silent_ring_gets_no_relation(spark):
+    """Neither a split OPEN ring nor a split ring that is not emitted
+    (Havflate: no tags) gets a split-ring relation."""
+    rels, parts = _relations(spark, [
+        (1, "d1", 0, "KURVE", 9, 0, False, False, True,
+         {"natural": "coastline"}, 4503),
+        (2, "d1", 0, "FLATE", 5, 0, False, True, False, {}, 4503)])
+    assert len(parts[1]) == 3 and len(parts[2]) == 3
+    assert rels == []
+
+
+def test_holed_silent_flate_keeps_relation(spark):
+    """A holed FLATE keeps its multipolygon even when it is not emitted
+    (Havflate), with an empty tag map."""
+    rels, _ = _relations(spark, [
+        (1, "d1", 0, "FLATE", 5, 0, False, True, False, {}, 10),
+        (2, "d1", 0, "FLATE", 5, 1, True, True, False, {}, 10)])
+    assert len(rels) == 1
+    assert rels[0]["rel_id"] == _holed_id(spark, "d1", 0, 5)
+    assert [(m["role"], m["way_id"]) for m in rels[0]["members"]] == \
+        [("outer", 1), ("inner", 2)]
+    assert dict(rels[0]["tags"]) == {}
 
 
 def test_pipeline_splits_long_ring_end_to_end(spark):

@@ -102,9 +102,9 @@ def test_codec_builds_without_sql_parser(monkeypatch):
 
 
 def test_tile_join_strategies_identical(spark):
-    """The doc_id-shuffle join (scale default: nothing corpus-sized is
-    broadcast) and the broadcast-media fan-out variant must return the
-    SAME row set."""
+    """The doc_id-shuffle join returns exactly the (doc, tile, cell,
+    way) rows where the cell's numpy ancestor (cells.parent) at the
+    tile's zoom is the tile's cell, in the same document."""
     from topo2osm_spark.operators.tiles import parse_media_refs, tile_vector_join
     rng = np.random.default_rng(7)
     lat = rng.uniform(58.0, 63.0, 300)
@@ -131,6 +131,9 @@ def test_tile_join_strategies_identical(spark):
     key = lambda rows: sorted((r["doc_id"], r["media_ref"], r["cell_id"], r["way_id"])
                               for r in rows)
     a = key(tile_vector_join(media, vcells).collect())
-    b = key(tile_vector_join(media, vcells, broadcast_media=True).collect())
-    assert a and a == b
+    want = sorted({(d, m["media_ref"], c, w)
+                   for m in media.collect() for d, w, c in vc_rows
+                   if d == m["doc_id"]
+                   and int(cells.parent(c, m["z"])) == m["tile_cell"]})
+    assert a and a == want
     assert not {r[1] for r in a} & set(bad)

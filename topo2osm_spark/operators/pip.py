@@ -24,7 +24,7 @@ COVER_SIDE^2 cells). A point's cells over the
 same range are shifts of its one finest-resolution cell id, so it meets
 a ring's cover at whichever resolution the ring chose. The join key is
 a 64-bit int; hot-cell skew is handled by AQE skew join + the salted
-refine (operators/skew.py).
+refine (pip_join's refine_salt).
 """
 
 from __future__ import annotations

@@ -1,24 +1,17 @@
-"""Skew handling: salted repartition + adaptive cell splitting
-(SURVEY.md §2 ops 41, 42; mandated by BASELINE.json:6/14).
+"""Deterministic salting (SURVEY.md §2 op 41; mandated by
+BASELINE.json:6/14).
 
 Dense coastal municipalities put a Zipf head on cell/municipality
-keys. Two explicit mechanisms (AQE skew-join stays on as backstop):
-
-- salting: append `salt = pmod(xxhash64(<row id cols>), S)` to the
-  shuffle key so one hot key spreads over S reducers; the build side
-  of a salted join explodes `sequence(0, S-1)`.
-- adaptive cell splitting: a count pre-pass finds cells whose row
-  count exceeds a threshold; those rows are re-encoded at resolution
-  r+k (children), everything else keeps its cell. Deterministic and
-  data-dependent — the hot-cell set is broadcast.
+keys. Appending `salt = pmod(xxhash64(<row id cols>), S)` to a shuffle
+key spreads one hot key over S reducers (AQE skew-join stays on as
+backstop). The conversion's own skew mechanisms live in
+`operators/pip.py`: each ring's cover at its own resolution (the
+adaptive cell split) and the salted refine.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-
-from topo2osm_spark.functions import cells
+from pyspark.sql import DataFrame, functions as F
 
 
 def add_salt(df: DataFrame, id_cols: list[str], buckets: int = 16,
@@ -27,56 +20,3 @@ def add_salt(df: DataFrame, id_cols: list[str], buckets: int = 16,
     resume/checkpoint must reproduce the same partitioning)."""
     return df.withColumn(salt_col,
                          F.pmod(F.xxhash64(*id_cols), F.lit(buckets)).cast("int"))
-
-
-def explode_salt(df: DataFrame, buckets: int = 16,
-                 salt_col: str = "salt") -> DataFrame:
-    """Build-side complement of add_salt for salted joins: replicate
-    each row to every salt bucket."""
-    return (df.withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1))))
-              .withColumn(salt_col, F.col("__s").cast("int"))
-              .drop("__s"))
-
-
-def salted_repartition(df: DataFrame, key_col: str, id_cols: list[str],
-                       buckets: int = 16, num_partitions: int | None = None) -> DataFrame:
-    """repartition on (key, salt): hot keys spread across `buckets`
-    partitions while cold keys stay co-located by key."""
-    salted = add_salt(df, id_cols, buckets)
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(key_col), F.col("salt"))
-    return salted.repartition(F.col(key_col), F.col("salt"))
-
-
-@F.pandas_udf(T.LongType())
-def _child_cell_udf(lat: pd.Series, lon: pd.Series, res: pd.Series) -> pd.Series:
-    import numpy as np
-    la, lo, rr = lat.to_numpy(), lon.to_numpy(), res.to_numpy()
-    out = np.empty(len(la), dtype=np.int64)
-    for r in np.unique(rr):
-        m = rr == r
-        out[m] = cells.encode(la[m], lo[m], int(r))
-    return pd.Series(out)
-
-
-def adaptive_cell_split(df: DataFrame, cell_col: str = "cell",
-                        lat_col: str = "lat", lon_col: str = "lon",
-                        threshold: int = 100_000, extra_res: int = 3) -> DataFrame:
-    """op 42: two-pass data-dependent re-encoding. Pass 1 counts rows
-    per cell; cells over `threshold` are re-encoded `extra_res` levels
-    finer (their rows get child cells), others keep their cell. The
-    hot-cell set is broadcast — no shuffle added to the main flow
-    beyond the count pre-pass."""
-    counts = df.groupBy(cell_col).agg(F.count(F.lit(1)).alias("_n"))
-    hot = counts.where(F.col("_n") > threshold) \
-                .select(F.col(cell_col).alias("_hot_cell"))
-    out = (df.join(F.broadcast(hot), df[cell_col] == F.col("_hot_cell"), "left")
-             .withColumn(
-                 cell_col,
-                 F.when(F.col("_hot_cell").isNotNull(),
-                        _child_cell_udf(
-                            F.col(lat_col), F.col(lon_col),
-                            F.shiftright(F.col(cell_col), 58) + F.lit(extra_res)))
-                  .otherwise(F.col(cell_col)))
-             .drop("_hot_cell"))
-    return out

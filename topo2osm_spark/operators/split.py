@@ -15,7 +15,8 @@ no Python, no shuffle beyond the explode's narrow fan-out:
 
 Split part ids are content-addressed (content_id(parent, part)), so
 they are stable across partitionings and cluster sizes like every
-other engine id.
+other engine id. Every relation is built from the split ways in one
+grouping (relations_from_ways), so its members are already the parts.
 """
 
 from __future__ import annotations
@@ -52,101 +53,49 @@ def split_long_ways(ways: DataFrame,
             .withColumn("n_nodes", F.size("node_ids")))
 
 
-def split_mapping(ways_split: DataFrame) -> DataFrame:
-    """(parent_way_id, part, way_id) rows for SPLIT ways only — the
-    broadcast side for relation-member expansion."""
-    return (ways_split.where(F.col("n_parts") > 1)
-            .select("parent_way_id", "part", "way_id"))
+def relations_from_ways(ways: DataFrame) -> DataFrame:
+    """Every relation, from the split ways in one grouping.
 
+    ways: split_long_ways output with doc_id, span_idx, geom_kind,
+    flate_id (a curve way's obj_id), ring_idx, is_hole, closed, emit and
+    tags. Each (doc_id, span_idx, geom_kind, flate_id) group emits:
 
-def expand_relation_members(relations: DataFrame,
-                            mapping: DataFrame) -> DataFrame:
-    """Replace every relation member whose way was split by that way's
-    parts (role preserved; parts in chain order, member order kept).
+    - a FLATE with any hole ring: its multipolygon, rel_id
+      content_id(doc_id, span_idx, "R", flate_id), every ring's parts in
+      (ring_idx, part) order, role inner for holes and outer otherwise
+      (kept when emit is false: a Havflate's relation has {} tags);
+    - any other group: one multipolygon per split closed emitting ring,
+      rel_id content_id(parent_way_id, "SR"), its parts in order as
+      outer members — a split ring no longer carries its area alone.
 
-    Splits are RARE (only >2000-node rings), so the explode+regroup
-    machinery runs only on relations that actually contain a split
-    member: a narrow explode of (rel_id, member way_id) semi-joined
-    against the (broadcast, tiny) split-parent set picks the affected
-    relations; everything else passes through untouched — the heavy
-    tags/members payload of the 99.9% unaffected relations never
-    enters a shuffle."""
-    # renamed copies avoid ambiguous-self-join resolution (the mapping
-    # participates in both the probe and the expansion join)
-    split_parents = (mapping.select(F.col("parent_way_id").alias("_sp"))
-                     .distinct())
-    map2 = mapping.select(F.col("parent_way_id").alias("_pw"),
-                          F.col("part").alias("_part"),
-                          F.col("way_id").alias("_sw"))
-    affected_ids = (relations
-                    .select("rel_id", F.explode("members").alias("m"))
-                    .join(F.broadcast(split_parents),
-                          F.col("m.way_id") == F.col("_sp"), "left_semi")
-                    .select("rel_id").distinct())
-    untouched = relations.join(F.broadcast(affected_ids), "rel_id",
-                               "left_anti")
-    affected = relations.join(F.broadcast(affected_ids), "rel_id",
-                              "left_semi")
-    m = (affected
-         .select("rel_id", "doc_id", "span_idx", "flate_id", "tags",
-                 "rel_type", F.posexplode("members").alias("mpos", "member")))
-    exp = (m.join(F.broadcast(map2),
-                  F.col("member.way_id") == F.col("_pw"), "left")
-           .select("rel_id", "doc_id", "span_idx", "flate_id", "tags",
-                   "rel_type", "mpos",
-                   F.coalesce("_part", F.lit(0)).alias("part"),
-                   F.struct(
-                       F.col("member.role").alias("role"),
-                       F.coalesce(F.col("_sw"), F.col("member.way_id"))
-                        .alias("way_id")).alias("member")))
-    # group on rel_id alone (maps are not groupable); the other columns
-    # are functionally dependent on it
-    expanded = (exp.groupBy("rel_id")
-                .agg(F.first("doc_id").alias("doc_id"),
-                     F.first("span_idx").alias("span_idx"),
-                     F.first("flate_id").alias("flate_id"),
-                     F.first("tags").alias("tags"),
-                     F.first("rel_type").alias("rel_type"),
-                     F.array_sort(F.collect_list(
-                         F.struct("mpos", "part", "member"))).alias("ms"))
-                .select("rel_id", "doc_id", "span_idx", "flate_id",
-                        F.transform("ms", lambda x: x["member"]).alias("members"),
-                        "tags", "rel_type"))
-    return untouched.unionByName(expanded)
-
-
-def synthesize_relations_for_split_rings(ways_split: DataFrame,
-                                         relations: DataFrame) -> DataFrame:
-    """A CLOSED ring that had to split can no longer carry its area
-    semantics as a single way: emit a multipolygon relation whose
-    outer members are the chain parts (OSM multipolygon convention).
-    Rings already referenced by an existing relation (holed FLATEs)
-    are excluded — their members were expanded in place."""
-    # bound the broadcast by the SPLIT-parent set (tiny), not the full
-    # relation-member set: only members that are split parents can veto
-    # a candidate, so the semi-join keeps `already` split-count-sized
-    # at any corpus scale.
-    split_parents = (ways_split.where(F.col("n_parts") > 1)
-                     .select("parent_way_id").distinct())
-    already = (relations.select(F.explode("members").alias("m"))
-               .select(F.col("m.way_id").alias("parent_way_id"))
-               .join(F.broadcast(split_parents), "parent_way_id",
-                     "left_semi")
-               .distinct())
-    cand = (ways_split
-            .where((F.col("n_parts") > 1) & F.col("closed") & F.col("emit"))
-            .join(F.broadcast(already), "parent_way_id", "left_anti"))
-    return (cand.groupBy("parent_way_id")
-            .agg(F.first("doc_id").alias("doc_id"),
-                 F.first("span_idx").alias("span_idx"),
-                 F.first("flate_id").alias("flate_id"),
-                 F.first("tags").alias("tags"),
-                 F.array_sort(F.collect_list(
-                     F.struct("part", F.struct(
-                         F.lit("outer").alias("role"),
-                         F.col("way_id").alias("way_id")).alias("member"))))
-                 .alias("pm"))
-            .select(content_id("parent_way_id", F.lit("SR")).alias("rel_id"),
-                    "doc_id", "span_idx", "flate_id",
-                    F.transform("pm", lambda x: x["member"]).alias("members"),
+    A group's ways share one tag map (FLATE rings share the objtype and
+    have no height for with_ele; a curve group is one object), so the
+    relation takes the first."""
+    member = F.struct(
+        F.when(F.col("is_hole"), F.lit("inner")).otherwise(F.lit("outer"))
+         .alias("role"), "way_id")
+    groups = (ways.groupBy("doc_id", "span_idx", "geom_kind", "flate_id")
+              .agg(F.bool_or("is_hole").alias("holed"),
+                   F.first("tags").alias("tags"),
+                   F.array_sort(F.collect_list(F.struct(
+                       "ring_idx", "part", "parent_way_id",
+                       ((F.col("n_parts") > 1) & F.col("closed")
+                        & F.col("emit")).alias("sr"),
+                       member.alias("member")))).alias("ws")))
+    ws = F.col("ws")
+    multipolygon = F.array(F.struct(
+        content_id("doc_id", "span_idx", F.lit("R"), "flate_id").alias("rel_id"),
+        F.transform(ws, lambda w: w["member"]).alias("members")))
+    split_rings = F.transform(
+        F.filter(ws, lambda w: w["sr"] & (w["part"] == 0)),
+        lambda p: F.struct(
+            content_id(p["parent_way_id"], F.lit("SR")).alias("rel_id"),
+            F.transform(F.filter(ws, lambda w: w["parent_way_id"]
+                                 == p["parent_way_id"]),
+                        lambda w: w["member"]).alias("members")))
+    return (groups
+            .select("doc_id", "span_idx", "flate_id", "tags",
+                    F.explode(F.when(F.col("holed"), multipolygon)
+                              .otherwise(split_rings)).alias("r"))
+            .select("r.rel_id", "doc_id", "span_idx", "flate_id", "r.members",
                     "tags", F.lit("multipolygon").alias("rel_type")))

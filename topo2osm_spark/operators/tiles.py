@@ -2,19 +2,16 @@
 
 Aligns `media_ref` tiles ("tile/{z}/{x}/{y}") to vector cells
 (north star, BASELINE.json:6). Because the cell grid at resolution r
-IS the slippy tile grid at zoom z=r (functions/cells.py), the join is
-a pure equi-join:
+IS the slippy tile grid at zoom z=r (functions/cells.py), a tile
+matches a vector cell exactly when the cell's ancestor at the tile's
+zoom is the tile's cell:
 
     media side:  (z, x, y)  ->  tile_cell = cell_from_tile(z, x, y)
-    vector side: way cover cell at res R  ->  ancestor at z
+    vector side: way node cell at VECTOR_RES, ancestor at z
 
-Tile zooms vary per media span (z in 10..14 here), so the vector side
-emits one ancestor key per DISTINCT zoom present — a broadcast
-cross-join against the lazily-computed distinct-zoom set (bounded by
-VECTOR_RES+1 rows, no driver-side collect). Both sides meet on (cell)
-int64 keys; AQE
-handles hot tiles (dense coastal cells), and dropDuplicates before
-the join keeps the fan-in bounded.
+Tile zooms vary per media span (z in 10..14 here), so the join is an
+equi-join on doc_id with the ancestor test as a codegen filter on the
+joined row; dropDuplicates after the join keeps one row per match.
 """
 
 from __future__ import annotations
@@ -138,59 +135,20 @@ def parse_media_refs(media_spans: DataFrame) -> DataFrame:
     return m.withColumn("tile_cell", tile_cell_expr(z, x, y))
 
 
-def tile_vector_join(media: DataFrame, vector_cells: DataFrame,
-                     per_document: bool = True,
-                     broadcast_media: bool = False) -> DataFrame:
+def tile_vector_join(media: DataFrame, vector_cells: DataFrame) -> DataFrame:
     """media: parse_media_refs output; vector_cells: (doc_id, way_id,
     cell) at VECTOR_RES. Returns (doc_id, media_ref, cell_id, way_id).
 
-    per_document=True (default, the FIXTURES.md contract) aligns a
-    media span's tile with ITS OWN document's vector cells — output is
-    O(media x cells-per-doc), linear in corpus size; deliberately
-    non-overlapping tiles match nothing. Strategy: plain equi-join on
-    doc_id with the zoom/ancestor alignment as a codegen FILTER on the
-    joined row. Both sides shuffle once on doc_id (the vector side
-    WITHOUT any zoom fan-out), the per-doc pair fan-in is bounded by
-    media-spans-per-doc x cells-per-doc, and nothing corpus-sized is
-    ever broadcast — the shape that survives a 10^12-doc table.
-
-    broadcast_media=True restores the map-side variant (vector side
-    pre-fanned out to one ancestor key per distinct zoom, media side
-    broadcast): fastest when the media table is a genuinely SMALL dim
-    (fits the broadcast budget), wrong at corpus scale — the broadcast
-    build serializes the whole media table through the driver.
-
-    per_document=False performs the global raster<->vector alignment
-    (any way touching the tile): shuffle equi-join on (z, ancestor)
-    with the zoom fan-out on the vector side; AQE's skew-join handles
-    hot coastal tiles. At scale that output is quadratic in dense
-    areas — callers must aggregate (e.g. counts per tile) rather than
-    materialize pairs."""
-    out_cols = ["doc_id", "media_ref", "cell_id", "way_id"]
-    if per_document and not broadcast_media:
-        joined = (vector_cells.join(
-                      media.select("doc_id", "media_ref", "z", "tile_cell"),
-                      "doc_id")
-                  .where(parent_cell_expr("cell", "z") == F.col("tile_cell")))
-        return (joined.select("doc_id", "media_ref",
-                              F.col("cell").alias("cell_id"), "way_id")
-                      .dropDuplicates(out_cols))
-    # fan-out path: one ancestor key per DISTINCT zoom present —
-    # derived lazily from the media side (broadcast cross-join on the
-    # tiny distinct-zoom set; z is bounded by VECTOR_RES so |zdf| <=
-    # 15). No driver-side collect: the zoom scan folds into the DAG.
-    # NO pre-dedup of vector_cells: deduplicating (doc, way, cell)
-    # before the fan-out costs a full shuffle of every way node; the
-    # duplicates only multiply cheap map-side codegen rows, and the
-    # output dropDuplicates (match-sized, small) already guarantees
-    # uniqueness.
-    zdf = media.select("z").distinct()
-    vc = (vector_cells.crossJoin(F.broadcast(zdf))
-          .withColumn("anc", parent_cell_expr("cell", "z")))
-    join_on = ["doc_id", "z", "anc"] if per_document else ["z", "anc"]
-    m = media.select("doc_id", "media_ref", "z",
-                     F.col("tile_cell").alias("anc"))
-    joined = vc.join(F.broadcast(m) if broadcast_media else m, join_on)
+    A media span's tile is aligned with ITS OWN document's vector cells
+    (the FIXTURES.md contract), so the output is O(media x
+    cells-per-doc), linear in corpus size; deliberately non-overlapping
+    tiles match nothing. Both sides shuffle once on doc_id with no zoom
+    fan-out, and nothing corpus-sized is ever broadcast — the shape
+    that survives a 10^12-doc table."""
+    joined = (vector_cells.join(
+                  media.select("doc_id", "media_ref", "z", "tile_cell"),
+                  "doc_id")
+              .where(parent_cell_expr("cell", "z") == F.col("tile_cell")))
     return (joined.select("doc_id", "media_ref",
                           F.col("cell").alias("cell_id"), "way_id")
-                  .dropDuplicates(out_cols))
+                  .dropDuplicates(["doc_id", "media_ref", "cell_id", "way_id"]))

@@ -45,6 +45,12 @@ from topo2osm_spark.operators import (assembly, nodes as nodeops, pip,
 from topo2osm_spark.sources import sosi
 from topo2osm_spark.sources.warehouse import Warehouse, fingerprint
 
+# kNN snap tolerance, and the latitude bound its bins are sized for
+# (mainland Norway; the snap raises on data beyond it). Both are folded
+# into the stage fingerprints that depend on them.
+SNAP_TOL_M = 0.5
+SNAP_MAX_ABS_LAT = 72.0
+
 
 class _Prefetcher:
     """Overlaps driver-side plan building with executor compute.
@@ -121,18 +127,17 @@ def echo_spans(docs: DataFrame) -> DataFrame:
                                s["media_ref"].alias("media_ref")))).alias("spans_sorted"))
 
 
-def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
+def run_pipeline(spark: SparkSession, docs: DataFrame,
                  warehouse: Warehouse | None = None, resume: bool = True,
                  run_pip: bool = True, run_tiles: bool = True,
                  persist_level: str = "DISK_ONLY",
                  input_fp: str | None = None,
                  parse_partitions: int | None = None,
-                 snap_max_abs_lat: float = 72.0,
                  cache_docs: bool | None = None) -> dict:
     """Full conversion; returns a dict of output DataFrames.
 
-    Every multiply-consumed intermediate (parsed geometry, rings, way
-    nodes, snap map, ways, relations) is a stage checkpoint: written
+    Every multiply-consumed intermediate (parsed geometry, way nodes,
+    node table, snap map, ways, PIP hit set) is a stage checkpoint: written
     through the warehouse when one is given, otherwise a lazy in-memory
     localCheckpoint that a background thread materializes while the
     rest of the plan is built (see ck() and _Prefetcher).
@@ -286,7 +291,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         # shuffle + per-FLATE regroup with span-local numpy. One persist
         # holds both row kinds.
         geo_all = ck(sosi.tokenize_project_assemble_spans(sosi_spans),
-                     "geo_objects", snap_tol_m)
+                     "geo_objects", SNAP_TOL_M)
         geo = geo_all.where(F.col("row_kind") == "obj") \
                      .drop("row_kind", "flate_id", "ring_idx", "is_hole",
                            "closed", "area", "n_curves", "n_orphan_refs")
@@ -355,22 +360,21 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         # bin probe), the output node table once
         nodes_raw = ck(nodeops.dedup_nodes(all_points), "nodes_raw")
 
-        # S6: kNN tolerance snap. The explicit latitude cap (default 72°,
-        # mainland-Norway bound; executor-side guard raises loudly on data
+        # S6: kNN tolerance snap. The explicit latitude cap
+        # (SNAP_MAX_ABS_LAT; executor-side guard raises loudly on data
         # beyond it) avoids snap_mapping's derive-by-agg DRIVER BARRIER:
         # with the barrier, the upstream chain must fully materialize
         # before the driver can build a single downstream plan — a fixed
-        # serial cost that caps N->4N scaling efficiency. Polar callers
-        # (Svalbard) pass snap_max_abs_lat explicitly.
+        # serial cost that caps N->4N scaling efficiency.
         # The mapping carries the canonical node's published coordinate
         # (c_lat/c_lon) straight out of the union-find, so the points path
         # below reads the tiny cached map instead of re-scanning the node
         # table. "v3" in the fingerprint: exact components; a checkpoint
         # from the old label propagation (which could leave two canons in
         # one component) must recompute, never resume.
-        snap_map = ck(nodeops.snap_mapping(nodes_raw, tol_m=snap_tol_m,
-                                           max_abs_lat=snap_max_abs_lat),
-                      "snap_map", "v3", snap_tol_m, snap_max_abs_lat)
+        snap_map = ck(nodeops.snap_mapping(nodes_raw, tol_m=SNAP_TOL_M,
+                                           max_abs_lat=SNAP_MAX_ABS_LAT),
+                      "snap_map", "v3", SNAP_TOL_M, SNAP_MAX_ABS_LAT)
         nodes_out = ck(nodeops.snap_nodes_table(nodes_raw, snap_map,
                                                 broadcast_hint=snap_hint),
                        "nodes")
@@ -399,39 +403,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, snap_tol_m: float = 0.5,
         tagged = tags.with_ele(tags.join_tags(way_meta, spark))
         ways_presplit = (tagged.join(way_node_lists, "way_id")
                          .withColumn("n_nodes", F.size("node_ids")))
-        # persisted: 3 consumers (ways output, relation-member expansion
-        # via split_mapping, synthesized relations for split rings)
         ways = ck(splitops.split_long_ways(ways_presplit), "ways")
-
-        # relations: multipolygon for every FLATE that has hole rings
-        flate_rings = rings.select("doc_id", "span_idx", "flate_id", "objtype",
-                                   "way_id", "is_hole", "ring_idx")
-        holed = (flate_rings.groupBy("doc_id", "span_idx", "flate_id", "objtype")
-                 .agg(F.max(F.col("is_hole").cast("int")).alias("has_holes"),
-                      F.array_sort(F.collect_list(F.struct(
-                          "ring_idx",
-                          F.when(F.col("is_hole"), F.lit("inner"))
-                           .otherwise(F.lit("outer")).alias("role"),
-                          "way_id"))).alias("members_raw"))
-                 .where(F.col("has_holes") == 1))
-        # persisted: 3 consumers (affected-id probe + pass-through/expand in
-        # expand_relation_members, already-in-relation probe in synth)
-        relations = ck(tags.join_tags(
-            holed.withColumn("geom_kind", F.lit("FLATE")), spark)
-            .withColumn("rel_id", content_id("doc_id", "span_idx", F.lit("R"), "flate_id"))
-            .select("rel_id", "doc_id", "span_idx", "flate_id",
-                    F.transform("members_raw",
-                                lambda m: F.struct(m["role"].alias("role"),
-                                                   m["way_id"].alias("way_id"))).alias("members"),
-                    "tags", F.lit("multipolygon").alias("rel_type")),
-            "relations_raw")
-        # way splitting propagates into relations: split members expand to
-        # their parts in place; split CLOSED rings not in any relation get
-        # a synthesized multipolygon carrying the area semantics.
-        split_map = splitops.split_mapping(ways)
-        synth_rels = splitops.synthesize_relations_for_split_rings(ways, relations)
-        relations = (splitops.expand_relation_members(relations, split_map)
-                     .unionByName(synth_rels))
+        # multipolygons of holed FLATEs and of split closed rings, with
+        # split members already expanded (one grouping of the ways)
+        relations = splitops.relations_from_ways(ways)
 
         # ...KP junction markers: every KP-marked coordinate must survive
         # quantize+snap as a node in the output table (the reference uses
