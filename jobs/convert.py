@@ -34,20 +34,12 @@ def main() -> int:
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--partitions", type=int, default=None,
                     help="input partitions for synthesized corpus")
-    ap.add_argument("--parse-partitions", type=int, default=None,
-                    help="partitions for the parse rebalance (pin this "
-                         "when comparing parallelism levels so both run "
-                         "the IDENTICAL job; Zipf-head skew makes coarse "
-                         "waves straggle at higher parallelism)")
     ap.add_argument("--aqe", action="store_true",
                     help="enable AQE (recommended on real clusters; its "
                          "per-stage re-optimization costs 1.5-2x at sandbox "
                          "scale, so local benches leave it off)")
-    ap.add_argument("--persist-level", default="DISK_ONLY",
-                    help="StorageLevel name for stage persists "
-                         "(DISK_ONLY | MEMORY_AND_DISK | ...)")
     ap.add_argument("--skip-counts", action="store_true",
-                    help="skip post-write count jobs + metrics table "
+                    help="skip post-write counts + metrics table "
                          "(scaling benches: removes fixed driver latency)")
     ap.add_argument("--xml", action="store_true",
                     help="also write OSM XML shards (<out>/xml_*) — the "
@@ -92,8 +84,6 @@ def main() -> int:
     wh = None if args.no_checkpoint else Warehouse(spark, args.out)
     out = run_pipeline(spark, docs, warehouse=wh, resume=args.resume,
                        input_fp=input_fp,
-                       persist_level=args.persist_level,
-                       parse_partitions=args.parse_partitions,
                        # file-backed input: keep the pruned parquet
                        # scans (echo/media) instead of caching the
                        # whole corpus; synthesized input: cache once,
@@ -136,10 +126,9 @@ def main() -> int:
     # write-job concurrency: enough overlap to hide per-job scheduler
     # latency, low enough to stay under the host's IPC-concurrency
     # collapse threshold (~8-12 active Arrow runner contexts).
-    wc = int(os.environ.get("SPARK_GRAFT_WRITE_CONCURRENCY", "2"))
     names = ("nodes", "ways", "relations", "tile_assignments", "echo",
              "points", "membership", "islands")
-    with ThreadPoolExecutor(max_workers=max(1, wc)) as ex:
+    with ThreadPoolExecutor(max_workers=2) as ex:
         for name, secs in ex.map(write_one, names):
             stage_secs[name] = secs
     if args.xml:
@@ -159,7 +148,10 @@ def main() -> int:
         stage_secs["xml"] = round(time.monotonic() - tx, 2)
     counts = {}
     if not args.skip_counts:
-        counts = {name: spark.read.parquet(os.path.join(args.out, "out_" + name)).count()
+        import pyarrow.dataset as ds
+        # row counts from the written parquet footers: no Spark job
+        counts = {name: ds.dataset(os.path.join(args.out, "out_" + name),
+                                   format="parquet").count_rows()
                   for name in names}
         # metrics table (op 4): per-objtype counts + integrity issues
         metrics = (out["objects"].groupBy("obj_kind", "objtype")

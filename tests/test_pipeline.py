@@ -6,6 +6,9 @@ dedup, span-sequence equality, tag table, tile alignment. All outputs
 are materialized ONCE (module fixture); assertions run on plain rows.
 """
 
+import contextlib
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -436,6 +439,71 @@ def test_relations_plan_is_one_grouping(pipeline_out):
            if "BroadcastExchange" in cls
            or any(k in cls for k in ("Python", "Arrow", "Pandas"))]
     assert not bad, f"relations plan holds {bad}"
+
+
+@contextlib.contextmanager
+def _session_conf(spark, settings: dict):
+    """Set session SQL confs for the block; restore them after it."""
+    old = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _output_names(plan) -> set:
+    out = plan.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_snap_map_join_broadcast_in_every_session(spark, pipeline_out):
+    """The snap map is broadcast by the code, not by the planner's size
+    estimate: with AQE on and automatic broadcasts off, fresh plans of
+    `points` and `integrity` each hold a BroadcastHashJoin whose build
+    side is the snap map."""
+    with _session_conf(spark, {"spark.sql.adaptive.enabled": "true",
+                               "spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        for name in ("points", "integrity"):
+            nodes = []
+            _plan_nodes(pipeline_out[name].select("*")
+                        ._jdf.queryExecution().executedPlan(), nodes)
+            assert any(cls == "BroadcastHashJoinExec"
+                       and "canon_id" in _output_names(node.buildPlan())
+                       for cls, _, node in nodes), \
+                f"{name} plan does not broadcast the snap map"
+
+
+def _frozen(v):
+    """A collected value as a hashable one: rows and arrays as tuples,
+    maps as sorted item tuples."""
+    if isinstance(v, (tuple, list)):
+        return tuple(_frozen(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, _frozen(x)) for k, x in v.items()))
+    return v
+
+
+def test_outputs_do_not_depend_on_aqe(spark, docs_df, pipeline_out):
+    """A conversion with AQE off (the batch job's and the benchmark's
+    local setting) writes the same rows, as multisets, as the test
+    session's AQE-on conversion.
+
+    `islands` is left out: its point metadata join fans out (obj_id
+    restarts per span; this corpus has 167 PIP point rows for 117
+    points), so the row its row_number keeps among ties follows the
+    physical row order (ROADMAP item 1)."""
+    from topo2osm_spark.plans.pipeline import run_pipeline
+    names = ("nodes", "ways", "relations", "points", "membership",
+             "tile_assignments", "echo", "integrity")
+    with _session_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        off = run_pipeline(spark, docs_df)
+        got = {n: Counter(map(_frozen, off[n].collect())) for n in names}
+    for n in names:
+        want = Counter(map(_frozen, pipeline_out[n].collect()))
+        assert got[n] == want, f"{n} differs with AQE off"
 
 
 def _jobs(spark) -> list[dict]:

@@ -151,16 +151,17 @@ def assemble_rings_docwide(flates: DataFrame, curves: DataFrame) -> DataFrame:
     self-contained flate that merely carries a truly-missing ref
     assembles exactly as the span-local kernel would have.
 
-    The deferred-ref set gets a broadcast hint only when AQE is off
-    (the same policy as the pipeline's snap-map joins): the set is tiny
-    on self-contained corpora, but its size is DATA-DEPENDENT — on a
-    corpus where cross-span documents are the norm (exactly when this
-    fallback fires) it is an exploded corpus-scaled table, and an
-    unconditional F.broadcast() would OOM the driver. Without AQE the
-    plans are stats-free local ones where the set is known-tiny; with
-    AQE on, no hint — the runtime promotes to broadcast from real
-    stage stats when the set really is small, and keeps a shuffle join
-    when it is not. Truly-missing refs drop out of the inner join and
+    The deferred-ref set gets a broadcast hint only when AQE is off.
+    Unlike the snap map, its size has no fixed bound: it is tiny on
+    self-contained corpora, but on a corpus where cross-span documents
+    are the norm (exactly when this fallback fires) it is an exploded
+    corpus-scaled table, and an unconditional F.broadcast() would OOM
+    the driver. Without AQE the plans are stats-free local ones where
+    the set is known-tiny; with AQE on, no hint — the runtime promotes
+    to broadcast from real stage stats when the set really is small,
+    and keeps a shuffle join when it is not. This fork goes with the
+    whole fallback once the parse kernel assembles every FLATE
+    (ROADMAP item 2). Truly-missing refs drop out of the inner join and
     surface in integrity_report as before."""
     from pyspark.sql import Window
     hint = str(flates.sparkSession.conf.get(

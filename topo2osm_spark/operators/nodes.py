@@ -24,10 +24,12 @@ stretch a component past 8 tolerances are degenerate input
 
 Scale notes: the candidate search is a count-agg over int64 bin keys
 and a broadcast probe of the multi-node bins, which stay small even on
-a dense coast because a bin is ~2 m wide. The snap mapping
-(non-identity labels only) is tiny relative to the node set, so the
-way-side rewrite join broadcasts when small and AQE-shuffles
-otherwise.
+a dense coast because a bin is ~2 m wide. Every join back of the snap
+mapping (non-identity labels only) lives here and broadcasts it, in
+every session: the union-find holds the whole edge set in ONE group,
+and the map has at most one row per node of that group, each narrower
+than an edge row, so the conversion fails in the union-find before
+the map could outgrow a broadcast.
 """
 
 from __future__ import annotations
@@ -238,29 +240,45 @@ def _snap_components(edges: pd.DataFrame, tol_m: float) -> pd.DataFrame:
                          "c_lat": lat[canon], "c_lon": lon[canon]})
 
 
-def apply_snap(df: DataFrame, mapping: DataFrame, node_col: str = "node_id",
-               broadcast_hint: bool = True) -> DataFrame:
-    """Rewrite node ids through the snap mapping (left join + coalesce).
-    The mapping (non-identity labels only) is usually tiny -> broadcast;
-    pass broadcast_hint=False at scales where it isn't and let AQE pick."""
-    # select first: the mapping carries the canon's c_lat/c_lon, which
-    # must not leak into the rewritten frame
-    m = (mapping.select("node_id", "canon_id")
-         .withColumnRenamed("node_id", "__snap_src"))
-    if broadcast_hint:
-        m = F.broadcast(m)
+def _snap_join(df: DataFrame, mapping: DataFrame, node_col: str) -> DataFrame:
+    """Left-join the broadcast mapping on node_col and rewrite it to the
+    canon id; the mapping's other columns (minus canon_id) stay."""
+    m = F.broadcast(mapping.withColumnRenamed("node_id", "__snap_src"))
     return (df.join(m, df[node_col] == m["__snap_src"], "left")
               .withColumn(node_col, F.coalesce("canon_id", node_col))
               .drop("__snap_src", "canon_id"))
 
 
-def snap_nodes_table(nodes: DataFrame, mapping: DataFrame,
-                     broadcast_hint: bool = True) -> DataFrame:
+def apply_snap(df: DataFrame, mapping: DataFrame,
+               node_col: str = "node_id") -> DataFrame:
+    """Rewrite node ids through the snap mapping (left join + coalesce).
+    The mapping is broadcast in every session: snap_mapping resolves all
+    merge edges in ONE union-find group and the map has at most one
+    (narrower) row per node of it, so the union-find fails before the
+    map could outgrow a broadcast."""
+    # select first: the mapping carries the canon's c_lat/c_lon, which
+    # must not leak into the rewritten frame
+    return _snap_join(df, mapping.select("node_id", "canon_id"), node_col)
+
+
+def snap_points(df: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Quantize point rows (lat/lon) and snap them: node_id becomes the
+    canon's id and lat/lon the canon's published coordinate. A point
+    that did not snap keeps its quantized position, which IS its own
+    node's coordinate by construction."""
+    scale = F.lit(10.0 ** QUANT)
+    return (_snap_join(quantize(df), mapping, "node_id")
+            .withColumn("lat", F.coalesce("c_lat", F.col("qlat") / scale))
+            .withColumn("lon", F.coalesce("c_lon", F.col("qlon") / scale))
+            .drop("c_lat", "c_lon"))
+
+
+def snap_nodes_table(nodes: DataFrame, mapping: DataFrame) -> DataFrame:
     """Fold snapped nodes into their canonical node: the canon keeps its
     coordinate (min-id wins, matching the reference's first-seen-wins
     dict insert) and absorbs the merged nodes' reference counts."""
     rewritten = apply_snap(nodes.withColumn("orig_id", F.col("node_id")),
-                           mapping, broadcast_hint=broadcast_hint)
+                           mapping)
     # the canonical id is the component MIN id, so min_by(orig_id)
     # recovers the canonical node's own coordinate
     return (rewritten.groupBy("node_id")

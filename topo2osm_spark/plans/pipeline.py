@@ -37,6 +37,7 @@ import logging
 import queue
 import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from topo2osm_spark.functions.ids import content_id
@@ -50,6 +51,12 @@ from topo2osm_spark.sources.warehouse import Warehouse, fingerprint
 # into the stage fingerprints that depend on them.
 SNAP_TOL_M = 0.5
 SNAP_MAX_ABS_LAT = 72.0
+# storage of the in-memory stage checkpoints. Measured on local[32]:
+# deserialized MemoryStore caching of the wide nested coord arrays
+# collapses under >=16 concurrent unrolling tasks (eviction thrash, 2-3x
+# slowdown), while DISK_ONLY stays flat — the local shuffle disk is fast
+# and columnar blocks compress.
+DISK_ONLY = StorageLevel.DISK_ONLY
 
 
 class _Prefetcher:
@@ -130,9 +137,7 @@ def echo_spans(docs: DataFrame) -> DataFrame:
 def run_pipeline(spark: SparkSession, docs: DataFrame,
                  warehouse: Warehouse | None = None, resume: bool = True,
                  run_pip: bool = True, run_tiles: bool = True,
-                 persist_level: str = "DISK_ONLY",
                  input_fp: str | None = None,
-                 parse_partitions: int | None = None,
                  cache_docs: bool | None = None) -> dict:
     """Full conversion; returns a dict of output DataFrames.
 
@@ -152,31 +157,11 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
     that manage input identity themselves, e.g. tests on a fixed
     in-memory corpus).
 
-    persist_level: DISK_ONLY by default. Measured on local[32]:
-    deserialized MemoryStore caching of the wide nested coord arrays
-    collapses under >=16 concurrent unrolling tasks (eviction thrash,
-    2-3x slowdown), while DISK_ONLY stays flat — the local shuffle
-    disk is fast and columnar blocks compress. On a real cluster with
-    per-executor memory pools, pass "MEMORY_AND_DISK" (serialized).
-
     cache_docs: None (auto) caches the input documents when there is
     no warehouse; False never caches them (file-backed callers keep
     their pruned media scan). With a warehouse the input is never
     cached, so an explicit cache_docs=True is ignored there.
     """
-    from pyspark import StorageLevel
-    level = getattr(StorageLevel, persist_level)
-    # broadcast hint on the snap-map rewrite joins. The mapping
-    # (non-identity labels only) is tiny on small corpora, but its size
-    # is DATA-DEPENDENT (proportional to near-duplicate boundary nodes —
-    # coastal-dense corpora grow it), so an unconditional hint is wrong
-    # at 100x. Hint only when AQE is off (local benches, where the
-    # mapping is known-tiny and stats-free leaves would otherwise force
-    # a sort-merge join); with AQE on (the production default) pass no
-    # hint and let the runtime convert to broadcast from real stage
-    # stats — the same policy tiles.py uses for the media side.
-    snap_hint = str(spark.conf.get(
-        "spark.sql.adaptive.enabled", "true")).lower() != "true"
     # the input fingerprint is the ROOT of the stage-fingerprint chain:
     # every ck() below folds ck_seq, so a changed input invalidates all
     # downstream checkpoints transitively.
@@ -215,14 +200,13 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         # output's analyzed plan reached 66k lines. Checkpointing
         # truncates the plan to a leaf at each stage boundary (the
         # warehouse branch above gets the same truncation from its
-        # parquet write+re-read). Storage level as configured
-        # (DISK_ONLY locally — see persist_level note).
+        # parquet write+re-read).
         # "Lazy" is only partly lazy: localCheckpoint(eager=False)
         # still blocks the CALLING thread until every broadcast side of
         # its plan is computed (measured in isolation, local mode, AQE
         # off, 4 vCPUs: a broadcast join of a 3-s mapInPandas side
         # blocked 6.3 s, the same join without a broadcast 0.17 s).
-        df = df.localCheckpoint(eager=False, storageLevel=level)
+        df = df.localCheckpoint(eager=False, storageLevel=DISK_ONLY)
         pf.submit(df, name)
         return df
 
@@ -233,7 +217,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
     pf = _Prefetcher() if warehouse is None else None
     try:
         if docs_cached:
-            docs = docs.localCheckpoint(eager=False, storageLevel=level)
+            docs = docs.localCheckpoint(eager=False, storageLevel=DISK_ONLY)
             pf.submit(docs, "documents")
 
         spans = explode_spans(docs)
@@ -251,8 +235,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         # shuffle of the raw span text is cheap next to tokenization and
         # buys even per-task work at any input file layout — the same
         # reasoning AQE's rebalance applies on a real cluster.
-        # parse_partitions: None = auto, 0 = keep the scan layout.
-        # Auto (r6): when the docs table is OUR cached checkpoint with at
+        # Exception (r6): when the docs table is OUR cached checkpoint with at
         # least core-count partitions, keep its layout — the generator
         # range-partitions by doc COUNT, so cached blocks are already
         # balanced and the span-text shuffle would be a pure extra pass
@@ -268,23 +251,17 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         # Keeping the generator's layout assumes parse COST per partition
         # is balanced, not just doc count: a partition holding several
         # Zipf-head (large) documents runs as one straggling task with no
-        # 2x-parallelism headroom to absorb it. A cached input with skewed
-        # per-partition parse cost should pass an explicit parse_partitions.
-        n_parse = parse_partitions
-        if n_parse is None:
-            try:
-                gen_parts = int(docs.schema["doc_id"].metadata.get(
-                    "gen_partitions", 0))
-            except Exception:
-                gen_parts = 0
-            if docs_cached and gen_parts >= spark.sparkContext.defaultParallelism:
-                n_parse = 0
-            else:
-                n_parse = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                              2 * spark.sparkContext.defaultParallelism)
+        # 2x-parallelism headroom to absorb it.
+        try:
+            gen_parts = int(docs.schema["doc_id"].metadata.get(
+                "gen_partitions", 0))
+        except Exception:
+            gen_parts = 0
         sosi_spans = spans.where(F.col("kind") == "sosi")
-        if n_parse:
-            sosi_spans = sosi_spans.repartition(n_parse)
+        if not (docs_cached and gen_parts >= sc.defaultParallelism):
+            sosi_spans = sosi_spans.repartition(max(
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+                2 * sc.defaultParallelism))
         # S4 (ring assembly) is fused INTO the same Arrow pass: a FLATE
         # only references curves of its own span, so assembling while the
         # span is resident in the parse worker replaces the refs->curves
@@ -367,17 +344,15 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         # before the driver can build a single downstream plan — a fixed
         # serial cost that caps N->4N scaling efficiency.
         # The mapping carries the canonical node's published coordinate
-        # (c_lat/c_lon) straight out of the union-find, so the points path
-        # below reads the tiny cached map instead of re-scanning the node
-        # table. "v3" in the fingerprint: exact components; a checkpoint
+        # straight out of the union-find, so the points path below reads
+        # the tiny cached map instead of re-scanning the node table.
+        # "v3" in the fingerprint: exact components; a checkpoint
         # from the old label propagation (which could leave two canons in
         # one component) must recompute, never resume.
         snap_map = ck(nodeops.snap_mapping(nodes_raw, tol_m=SNAP_TOL_M,
                                            max_abs_lat=SNAP_MAX_ABS_LAT),
                       "snap_map", "v3", SNAP_TOL_M, SNAP_MAX_ABS_LAT)
-        nodes_out = ck(nodeops.snap_nodes_table(nodes_raw, snap_map,
-                                                broadcast_hint=snap_hint),
-                       "nodes")
+        nodes_out = ck(nodeops.snap_nodes_table(nodes_raw, snap_map), "nodes")
 
         # S7: re-collect way node lists in position order through the snap
         # map, then drop CONSECUTIVE duplicate ids: two adjacent vertices
@@ -385,7 +360,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         # (invalid OSM way geometry). First==last on closed rings survives
         # (they are never adjacent). JVM HOF filter — no Python.
         wn = nodeops.apply_snap(way_nodes.select("way_id", "pos", "node_id"),
-                                snap_map, broadcast_hint=snap_hint)
+                                snap_map)
         nids = F.transform("pn", lambda x: x["node_id"])
         way_node_lists = (wn.groupBy("way_id")
                             .agg(F.array_sort(F.collect_list(F.struct("pos", "node_id")))
@@ -422,7 +397,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         kp_snapped = nodeops.apply_snap(
             nodeops.quantize(kp_pts).select("doc_id", "span_idx", "obj_id",
                                             "node_id"),
-            snap_map, broadcast_hint=snap_hint)
+            snap_map)
         kp_missing = (kp_snapped
                       .join(nodes_out.select("node_id"), "node_id", "left_anti")
                       .select(F.lit("kp_node_missing").alias("issue"),
@@ -433,11 +408,9 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         # (Høydetall -> ele=<STRENG>), routed through the same tag lookup
         # as ways. node_id goes through quantize+snap, so a label
         # sitting on a way vertex resolves to that vertex's canonical node.
-        # Published lat/lon are the CANONICAL node's coordinates: the snap
-        # map carries the canon coords, so a consumer joining points
-        # to nodes on node_id never sees divergent positions. Points whose
-        # id did not snap keep their own quantized position, which IS the
-        # canonical node's coordinate by construction.
+        # Published lat/lon are the CANONICAL node's coordinates
+        # (snap_points), so a consumer joining points to nodes on node_id
+        # never sees divergent positions.
         point_objs = (geo.where(F.col("obj_kind").isin("PUNKT", "TEKST"))
                       .select("doc_id", "span_idx", "obj_id", "objtype", "streng",
                               F.col("obj_kind").alias("geom_kind"),
@@ -445,25 +418,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
                               F.element_at("lons", 1).alias("lon"))
                       .where(F.col("lat").isNotNull()))
         tagged_pts = tags.with_streng_ele(tags.join_tags(point_objs, spark))
-        snap_map_c = snap_map.select(F.col("node_id").alias("__snap_src"),
-                                     "canon_id", "c_lat", "c_lon")
-        if snap_hint:
-            snap_map_c = F.broadcast(snap_map_c)
-        q_pts = nodeops.quantize(tagged_pts)
-        pts_snapped = (q_pts.join(snap_map_c,
-                                  q_pts["node_id"] == snap_map_c["__snap_src"],
-                                  "left")
-                       .withColumn("node_id", F.coalesce("canon_id", "node_id")))
-        points_out = (pts_snapped.where(F.col("emit"))
+        points_out = (nodeops.snap_points(tagged_pts, snap_map)
+                      .where(F.col("emit"))
                       .select("node_id", "doc_id", "span_idx", "obj_id",
-                              "objtype",
-                              F.coalesce(
-                                  "c_lat",
-                                  F.col("qlat") / F.lit(10.0 ** nodeops.QUANT)).alias("lat"),
-                              F.coalesce(
-                                  "c_lon",
-                                  F.col("qlon") / F.lit(10.0 ** nodeops.QUANT)).alias("lon"),
-                              "tags"))
+                              "objtype", "lat", "lon", "tags"))
 
         out = {
             "spans": spans,

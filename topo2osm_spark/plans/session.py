@@ -29,7 +29,7 @@ def build_session(app: str = "topo2osm_spark", master: str | None = None,
          # parallel side (echo wrote in ~20 s at BOTH local[1] and
          # local[4], BENCH r2). 32 MB keeps those JVM-only scan stages
          # wide; the Arrow parse path is unaffected (it repartitions
-         # explicitly, pipeline.py parse_partitions).
+         # explicitly, see run_pipeline).
          .config("spark.sql.files.maxPartitionBytes",
                  os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
                                 str(32 * 1024 * 1024)))
